@@ -55,15 +55,20 @@ object JobSpec {
       get(arr, lit(4)).as("fileName"))
   }
 
+  /** Never-null dispatch predicate over a parsed job row: a `process`
+    * action that names a file.
+    */
+  val dispatchable: Column = coalesce(
+    col("action") === lit("process") && col("fileName").isNotNull,
+    lit(false))
+
   /** Split a parsed job stream into (dispatchable, quarantined).
     * The reference's dispatch filter (P1, GetJobs.py:29-30) silently
     * skips-and-never-acks unknown actions — an unbounded-redelivery
     * defect; we route them to an explicit quarantine branch.
     */
-  def dispatch(jobs: DataFrame): (DataFrame, DataFrame) = {
-    val ok = col("action") === lit("process") && col("fileName").isNotNull
-    (jobs.filter(ok), jobs.filter(!ok || ok.isNull))
-  }
+  def dispatch(jobs: DataFrame): (DataFrame, DataFrame) =
+    (jobs.filter(dispatchable), jobs.filter(!dispatchable))
 
   /** Is this envelope fileName safe to resolve under the input
     * directory? The reference stages by RAW fileName

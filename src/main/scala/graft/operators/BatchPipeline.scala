@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.NamedSink
@@ -19,6 +19,12 @@ object BatchPipeline {
 
   final case class Result(processed: Long, failed: Long)
 
+  /** Quarantine location convention, shared by run()/retryQuarantine()
+    * (and JobStream's streaming quarantine partitions live under the
+    * same root).
+    */
+  def quarantineDir(outDir: String): String = s"${outDir}_quarantine"
+
   /** Bounded retry of quarantined jobs (SURVEY.md M1: the reference
     * redelivers poison messages FOREVER; we quarantine them and
     * re-drive with an attempt budget). Reads `<outDir>_quarantine`,
@@ -26,12 +32,6 @@ object BatchPipeline {
     * and rewrites the quarantine with an incremented `attempts`
     * column; rows at `maxAttempts` are left as permanent failures.
     */
-  /** Quarantine location convention, shared by run()/retryQuarantine()
-    * (and JobStream's streaming quarantine partitions live under the
-    * same root).
-    */
-  def quarantineDir(outDir: String): String = s"${outDir}_quarantine"
-
   def retryQuarantine(
       spark: SparkSession, inDir: String, outDir: String,
       command: Seq[String], ext: String = ".out",
@@ -41,51 +41,40 @@ object BatchPipeline {
     val q = (if (raw.columns.contains("attempts")) raw
       else raw.withColumn("attempts", lit(1)))
       .select("key", "exitCode", "error", "attempts")
-    val (eligible, exhausted) = (
-      q.filter(col("attempts") < maxAttempts),
-      q.filter(col("attempts") >= maxAttempts))
-    val keys = eligible.select("key").distinct()
     val files = FileIngest.keyed(FileIngest.readDir(spark, inDir),
       baseDir = Some(inDir))
-      .join(keys, Seq("key"), "left_semi")
-    val results = PipeTransform.transform(files, command)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (ok, bad) = PipeTransform.split(results)
-      NamedSink.write(ok, outDir, ext)
-      // count BEFORE touching the quarantine files: the persisted
-      // cache is not durable, and recomputation after the swap would
-      // scan quarantine part-files that no longer exist
-      val okCount = ok.count()
-      // attempted keys come from the persisted results (no second
-      // input-dir scan); un-attempted (vanished-input) rows keep
-      // their quarantine entry unchanged
-      val notFound = eligible.join(
-        results.select("key").distinct(), Seq("key"), "left_anti")
-      val stillFailing = bad.select("key", "exitCode", "error")
-        .join(eligible.select(col("key"), col("attempts")), Seq("key"))
-        .withColumn("attempts", col("attempts") + 1)
-        .unionByName(notFound)
-        .unionByName(exhausted)
-      // the quarantine is both input and output: write the next
-      // generation aside, then swap via rename-aside + rename-in so
-      // no window exists where the data lives only in a deleted path;
-      // Hadoop rename reports failure via `false`, so check it.
-      val fs = new org.apache.hadoop.fs.Path(qDir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      def path(p: String) = new org.apache.hadoop.fs.Path(p)
-      val next = qDir + "_next"
-      val old = qDir + "_old"
-      stillFailing.write.mode("overwrite").parquet(next)
-      val failedCount = spark.read.parquet(next).count()
-      fs.delete(path(old), true)
-      require(fs.rename(path(qDir), path(old)),
-        s"rename $qDir -> $old failed")
-      require(fs.rename(path(next), path(qDir)),
-        s"rename $next -> $qDir failed; previous quarantine at $old")
-      fs.delete(path(old), true)
-      Result(okCount, failedCount)
-    } finally { results.unpersist(); () }
+      .join(q.filter(col("attempts") < maxAttempts), Seq("key"), "left_semi")
+    val r = NamedSink.publish(PipeTransform.transform(files, command),
+      outDir, ext)
+    // a quarantine row without a result was not attempted (exhausted,
+    // or its input is gone) and keeps its entry unchanged
+    val tried = col("r.key").isNotNull
+    val next = q.as("q").join(r.as("r"), col("q.key") === col("r.key"),
+      "left_outer").select(
+      col("q.key"),
+      when(tried, col("r.exitCode")).otherwise(col("q.exitCode"))
+        .as("exitCode"),
+      when(tried, col("r.error")).otherwise(col("q.error")).as("error"),
+      when(tried, col("q.attempts") + 1).otherwise(col("q.attempts"))
+        .as("attempts"),
+      coalesce(col("r.published"), lit(false)).as("published"))
+    // the quarantine is both input and output: write the next
+    // generation aside, then swap via rename-aside + rename-in so
+    // no window exists where the data lives only in a deleted path;
+    // Hadoop rename reports failure via `false`, so check it.
+    val fs = new org.apache.hadoop.fs.Path(qDir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def path(p: String) = new org.apache.hadoop.fs.Path(p)
+    val nextDir = qDir + "_next"
+    val old = qDir + "_old"
+    val res = writeQuarantine(next, nextDir)
+    fs.delete(path(old), true)
+    require(fs.rename(path(qDir), path(old)),
+      s"rename $qDir -> $old failed")
+    require(fs.rename(path(nextDir), path(qDir)),
+      s"rename $nextDir -> $qDir failed; previous quarantine at $old")
+    fs.delete(path(old), true)
+    res
   }
 
   /** Run `command <in> <out>` over every file in `inDir`, writing
@@ -94,31 +83,29 @@ object BatchPipeline {
     * defect in SURVEY.md §1.4); they land in a parquet quarantine at
     * `<outDir>_quarantine` (key, exitCode, error) for bounded retry
     * by the caller.
-    *
-    * `partitions`: number of tasks to spread files over. Small
-    * partitions (~1 file each) preserve the reference's pull-based
-    * work-stealing for lumpy job times (SURVEY.md §4.2); large ones
-    * amortize scheduling for tiny files.
     */
   def run(
       spark: SparkSession, inDir: String, outDir: String,
-      command: Seq[String], ext: String = ".out",
-      partitions: Int = 0): Result = {
+      command: Seq[String], ext: String = ".out"): Result = {
     val files = FileIngest.keyed(FileIngest.readDir(spark, inDir),
       baseDir = Some(inDir))
-    val sized =
-      if (partitions > 0) files.repartition(partitions) else files
-    // Persist so the external command runs exactly once per record
-    // even though three actions (sink write, quarantine write, counts)
-    // consume the result.
-    val results = PipeTransform.transform(sized, command)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (ok, bad) = PipeTransform.split(results)
-      NamedSink.write(ok, outDir, ext)
-      bad.select("key", "exitCode", "error")
-        .write.mode("overwrite").parquet(quarantineDir(outDir))
-      Result(ok.count(), bad.count())
-    } finally { results.unpersist(); () }
+    writeQuarantine(
+      NamedSink.publish(PipeTransform.transform(files, command), outDir, ext),
+      quarantineDir(outDir))
+  }
+
+  /** The pipeline's one action: write the `!published` rows to `dest`,
+    * counting both sides on the way. The command runs and publishes
+    * inside this write's tasks, so nothing is cached and each file
+    * spawns once.
+    */
+  private def writeQuarantine(rows: DataFrame, dest: String): Result = {
+    val obs = new Observation("pipeline")
+    rows.observe(obs, count(when(col("published"), 1)).as("ok"),
+        count(when(!col("published"), 1)).as("failed"))
+      .filter(!col("published")).drop("published")
+      .write.mode("overwrite").parquet(dest)
+    val m = obs.get
+    Result(m("ok").asInstanceOf[Long], m("failed").asInstanceOf[Long])
   }
 }

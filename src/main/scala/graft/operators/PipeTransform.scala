@@ -150,8 +150,9 @@ object PipeTransform {
         // A command that exits 0 without writing its output file is a
         // FAILURE (the reference's upload would throw and SQS would
         // redeliver, GetJobs.py:57-60). Surface it with a synthetic
-        // nonzero exit code so every exitCode!=0 consumer — split(),
-        // quarantine counting — routes it to retry, never to the sink.
+        // nonzero exit code so every exitCode!=0 consumer — the
+        // sink's success test, quarantine counting — routes it to
+        // retry, never to the sink.
         val syntheticExit = if (exit == 0) NoOutputExit else exit
         Row(key, null, syntheticExit,
           if (stderr.nonEmpty) stderr.take(4096)
@@ -380,18 +381,5 @@ object PipeTransform {
         val l = nextLine; nextLine = null; l
       }
     }
-  }
-
-  /** Success/failure split (P3, reference GetJobs.py:54-56 + 37-39):
-    * successes flow to the sink; failures to quarantine with a
-    * retry-count discipline owned by the caller.
-    */
-  def split(results: DataFrame): (DataFrame, DataFrame) = {
-    // Belt and braces: success requires BOTH exit 0 AND bytes to
-    // publish. runOne already maps exit-0-no-output to NoOutputExit,
-    // but a null output row from any other producer must never be
-    // silently dropped by the sink — route it to quarantine too.
-    val ok = results("exitCode") === 0 && results("output").isNotNull
-    (results.filter(ok), results.filter(!ok))
   }
 }

@@ -18,12 +18,6 @@ object PipelineQueries {
 
   private def T(s: SparkSession, dir: String) = Engine.Tables(s, dir)
 
-  /** documents.text staged as binary content keyed by doc_id.
-    * The fixture parquet is one tiny file -> one scan partition; the
-    * pipe transform is process-spawn bound, so spread rows across all
-    * task slots first (at real scale the input arrives pre-split and
-    * this repartition is the caller's knob, BatchPipeline.partitions).
-    */
   /** One temp shard dir per sfDir, cleaned up at JVM exit. */
   private val p05Dirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
@@ -41,6 +35,11 @@ object PipelineQueries {
       f.toString
     })
 
+  /** documents.text staged as binary content keyed by doc_id.
+    * The fixture parquet is one tiny file -> one scan partition; the
+    * pipe transform is process-spawn bound, so spread rows across all
+    * task slots first (at real scale the input arrives pre-split).
+    */
   private def docsAsFiles(s: SparkSession, dir: String) =
     Engine.widenIfNarrow(T(s, dir).documents.select(
       col("doc_id").cast("string").as("key"),

@@ -4,8 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.types._
 
 /** Deterministic-name output sink (S6, reference GetJobs.py:57-60):
   * each record is published as `<outDir>/<key><ext>` — the naming
@@ -13,11 +13,11 @@ import org.apache.spark.sql.functions._
   * (README.md:124).
   *
   * Spark's own writers randomize part-file names, so exact naming
-  * needs a `foreachPartition` writer. Idempotence under task retries
-  * (the at-least-once story, SURVEY.md §1.4): write to a task-unique
-  * temp file, then rename — a duplicate execution overwrites with
-  * identical bytes instead of interleaving, upgrading the reference's
-  * mid-write clobber race to last-writer-wins.
+  * needs a per-row writer inside the task. Idempotence under task
+  * retries (the at-least-once story, SURVEY.md §1.4): write to a
+  * task-unique temp file, then rename — a duplicate execution
+  * overwrites with identical bytes instead of interleaving, upgrading
+  * the reference's mid-write clobber race to last-writer-wins.
   *
   * Filesystem access goes through the Hadoop `FileSystem` API (the
   * reference's output contract is an object-store PUT), so `outDir`
@@ -34,38 +34,56 @@ import org.apache.spark.sql.functions._
   */
 object NamedSink {
 
-  /** Write (key, output) rows as individual files. Returns nothing;
-    * runs as a distributed action.
+  /** One row per published result: `published` iff the row succeeded
+    * and its file is in place.
     */
-  def write(results: DataFrame, outDir: String, ext: String): Unit = {
-    val spark = results.sparkSession
-    val driverConf = spark.sessionState.newHadoopConf()
+  private val publishedSchema: StructType = StructType(Seq(
+    StructField("key", StringType),
+    StructField("exitCode", IntegerType),
+    StructField("error", StringType),
+    StructField("published", BooleanType, nullable = false)))
+
+  /** Publish every successful row of a `PipeTransform` result as
+    * `<outDir>/<key><ext>`, inside the task that ran the command.
+    * Success is exit 0 AND bytes to publish (reference GetJobs.py:54-60):
+    * a null output row from any producer is a failure, never silently
+    * dropped. Lazy and narrow — nothing runs until the caller's action,
+    * and the output bytes never leave the task. Every input row comes
+    * back as (key, exitCode, error, published), so one caller action
+    * can quarantine the `!published` rows and count both sides.
+    */
+  def publish(results: DataFrame, outDir: String, ext: String): DataFrame = {
+    val driverConf = results.sparkSession.sessionState.newHadoopConf()
     // Serialize the conf as (key, value) pairs: Hadoop Configuration
     // itself is not java-serializable.
     val confProps: Array[(String, String)] =
       driverConf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
     val dir = new Path(outDir)
     dir.getFileSystem(driverConf).mkdirs(dir)
-    val dirStr = outDir
-    results.select(col("key"), col("output"))
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        if (it.hasNext) {
-          val conf = new Configuration(false)
-          confProps.foreach { case (k, v) => conf.set(k, v) }
-          val d = new Path(dirStr)
-          val fs = d.getFileSystem(conf)
+    results.select("key", "output", "exitCode", "error").mapPartitions {
+      (it: Iterator[Row]) =>
+        val d = new Path(outDir)
+        lazy val conf = {
+          val c = new Configuration(false)
+          confProps.foreach { case (k, v) => c.set(k, v) }
+          c
+        }
+        lazy val fs = {
+          val f = d.getFileSystem(conf)
           // LocalFileSystem is checksummed by default and would strew
           // .crc sidecars next to every published object
-          fs.setWriteChecksum(false)
-          fs.setVerifyChecksum(false)
-          it.foreach { row =>
-            val key = row.getString(0)
-            val bytes = row.getAs[Array[Byte]](1)
-            if (bytes != null)
-              writeAtomic(fs, conf, d, sanitize(key) + ext, bytes)
-          }
+          f.setWriteChecksum(false)
+          f.setVerifyChecksum(false)
+          f
         }
-      }
+        it.map { row =>
+          val key = row.getString(0)
+          val ok = !row.isNullAt(1) && !row.isNullAt(2) && row.getInt(2) == 0
+          if (ok) writeAtomic(fs, conf, d, sanitize(key) + ext,
+            row.getAs[Array[Byte]](1))
+          Row(key, row.get(2), row.getString(3), ok)
+        }
+    }(Encoders.row(publishedSchema))
   }
 
   /** The reference stages/publishes by raw fileName, allowing path

@@ -99,12 +99,11 @@ object JobStream {
     byParent.iterator.flatMap { case (dir, ns) =>
       if (ns.length < BulkStatThreshold)
         ns.iterator.map { n =>
-          val p = new org.apache.hadoop.fs.Path(base, n)
-          val len =
-            if (fs.exists(p) && fs.getFileStatus(p).isFile)
-              Some(fs.getFileStatus(p).getLen)
-            else None
-          (n, len)
+          // one metadata call per name: absence is the exception
+          val st =
+            try Some(fs.getFileStatus(new org.apache.hadoop.fs.Path(base, n)))
+            catch { case _: java.io.FileNotFoundException => None }
+          (n, st.filter(_.isFile).map(_.getLen))
         }
       else {
         // stream the listing and keep ONLY the batch's own names:
@@ -136,27 +135,30 @@ object JobStream {
   /** One micro-batch = one bounded pipe pass over ONLY the files the
     * batch names. Package-private for direct testing.
     *
-    * The batch's fileName set is bounded by maxFilesPerTrigger x
-    * lines-per-envelope-file, so collecting it to the driver is the
-    * streaming analog of "one SQS message batch" — and it lets us
-    * read exactly those objects (per-key GETs, like the reference's
+    * The batch is bounded by maxFilesPerTrigger x lines-per-envelope
+    * file, so it is collected to the driver ONCE — the streaming analog
+    * of "one SQS message batch" — and names, hostile names and
+    * undispatchable rows all come from that array. It lets us read
+    * exactly the named objects (per-key GETs, like the reference's
     * worker) instead of rescanning the whole input directory every
-    * trigger.
+    * trigger. The quarantine write is then the batch's one action: the
+    * command runs and publishes inside its tasks.
     */
   private[streaming] def processBatch(
       batch: DataFrame, batchId: Long, inputDir: String, outputDir: String,
       command: Seq[String], ext: String): Unit = {
-    if (batch.isEmpty) return
+    val rows = batch.select(JobSpec.dispatchable, col("action"),
+      col("fileName"), col("envelope")).collect()
+    if (rows.isEmpty) return
     val spark = batch.sparkSession
-    val (ok, bad) = JobSpec.dispatch(batch)
+    val (ok, bad) = rows.partition(_.getBoolean(0))
     // PATH-TRAVERSAL gate at the staging boundary (the round-17
     // adversarial-input lens): fileName comes off the wire, and
     // `new Path(inputDir, fileName)` resolves `..` upward — the
     // reference reads and republishes ANY host file a message names
     // (GetJobs.py:44,51). Unsafe names quarantine like every other
     // malformed envelope; they never become paths.
-    val (names, hostileNames) = ok.select("fileName").distinct()
-      .collect().map(_.getString(0))
+    val (names, hostileNames) = ok.map(_.getString(2)).distinct
       .partition(JobSpec.pathSafe)
     // driver-side existence check: metadata-only, bulk-listed per
     // parent directory past a small threshold (statNames) so a wide
@@ -174,11 +176,15 @@ object JobStream {
     val empties = stats.collect { case (n, Some(0L)) => n }
     val absent = stats.collect { case (n, None) => n }
     import spark.implicits._
-    val missing = (absent.toSeq.map(n =>
+    val refused = (absent.toSeq.map(n =>
       (n, -2, "input object not found")) ++
       hostileNames.toSeq.map(n =>
         (n, -4, "unsafe fileName (path traversal) — refused to " +
-          "resolve under the input directory")))
+          "resolve under the input directory")) ++
+      bad.toSeq.map(r =>
+        (Option(r.getString(2)).getOrElse(r.getString(3)), -3,
+          "undispatchable action: " +
+            Option(r.getString(1)).getOrElse("null"))))
       .toDF("key", "exitCode", "error")
     val scanned =
       if (present.isEmpty) None
@@ -195,27 +201,16 @@ object JobStream {
       case (Some(a), Some(b)) => Some(a.unionByName(b))
       case (a, b) => a.orElse(b)
     }
-    val results =
-      input.map(in => PipeTransform.transform(in, command).persist())
-    try {
-      results.foreach { r =>
-        NamedSink.write(PipeTransform.split(r)._1, outputDir, ext)
-      }
-      val failed = results.map(r => PipeTransform.split(r)._2
-        .select("key", "exitCode", "error"))
-        .getOrElse(missing.limit(0))
-      failed
-        .unionByName(missing)
-        .unionByName(bad.select(
-          coalesce(col("fileName"), col("envelope")).as("key"),
-          lit(-3).as("exitCode"),
-          concat(lit("undispatchable action: "),
-            coalesce(col("action"), lit("null"))).as("error")))
-        // per-batch overwrite => a retried micro-batch rewrites its own
-        // partition instead of appending duplicates (foreachBatch is
-        // at-least-once; this keeps the quarantine exactly-once too)
-        .write.mode("overwrite")
-        .parquet(s"${outputDir}_quarantine/batch=$batchId")
-    } finally { results.foreach(_.unpersist()); () }
+    input.map(in =>
+      NamedSink.publish(PipeTransform.transform(in, command), outputDir, ext)
+        .filter(!col("published"))
+        .select("key", "exitCode", "error")
+        .unionByName(refused))
+      .getOrElse(refused)
+      // per-batch overwrite => a retried micro-batch rewrites its own
+      // partition instead of appending duplicates (foreachBatch is
+      // at-least-once; this keeps the quarantine exactly-once too)
+      .write.mode("overwrite")
+      .parquet(s"${outputDir}_quarantine/batch=$batchId")
   }
 }

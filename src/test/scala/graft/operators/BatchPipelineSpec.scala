@@ -2,9 +2,11 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SpawnCounter, TestSpark}
 
 class BatchPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -91,5 +93,49 @@ class BatchPipelineSpec extends AnyFunSuite {
     assert(r4.processed == 0 && r4.failed == 1) // exhausted, untouched
     val rows = spark.read.parquet(out2 + "_quarantine").collect()
     assert(rows.length == 1 && rows.head.getAs[Int]("attempts") == 3)
+  }
+
+  test("run and retryQuarantine spawn the command once per input file") {
+    // nothing caches the results, so a second action over them would
+    // silently run the command again
+    val (in, files) = mkInputs()
+    val tmp = Files.createTempDirectory("graft-spawn-")
+    val out = tmp.resolve("out").toString
+    val runCount = tmp.resolve("run.count")
+    val r0 = BatchPipeline.run(spark, in, out,
+      SpawnCounter.command(runCount, refuseEmpty = true))
+    assert(r0 == BatchPipeline.Result(files.size - 1L, 1L))
+    assert(SpawnCounter.spawns(runCount) == files.size)
+    val retryCount = tmp.resolve("retry.count")
+    val r1 = BatchPipeline.retryQuarantine(spark, in, out,
+      SpawnCounter.command(retryCount))
+    assert(r1 == BatchPipeline.Result(1L, 0L))
+    assert(SpawnCounter.spawns(retryCount) == 1) // the quarantined file only
+    assert(Files.readAllBytes(Paths.get(out, "empty.out")).isEmpty)
+  }
+
+  test("one run over an unshuffled directory submits exactly one Spark job") {
+    val (in, files) = mkInputs()
+    val out = Files.createTempDirectory("graft-out-").toString
+    val group = s"graft-one-job-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "one pipeline run")
+    try {
+      val res = BatchPipeline.run(spark, in, out, Seq("cp"))
+      assert(res == BatchPipeline.Result(files.size.toLong, 0L))
+      ListenerBusDrain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 1, s"${jobs.get} jobs for one run")
   }
 }

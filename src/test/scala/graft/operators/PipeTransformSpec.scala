@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sinks.NamedSink
 
 class PipeTransformSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -15,6 +18,18 @@ class PipeTransformSpec extends AnyFunSuite {
   private def df(rows: (String, Array[Byte])*) =
     spark.createDataFrame(
       java.util.Arrays.asList(rows.map(r => Row(r._1, r._2)): _*), inSchema)
+
+  /** Publish `results` to a fresh dir: (published keys, failed keys).
+    * Exactly the published keys must have landed as files.
+    */
+  private def publishSplit(results: DataFrame): (Seq[String], Seq[String]) = {
+    val out = Files.createTempDirectory("graft-pub-")
+    val (ok, bad) = NamedSink.publish(results, out.toString, ".out")
+      .collect().partition(_.getBoolean(3))
+    val okKeys = ok.map(_.getString(0)).toSeq
+    assert(out.toFile.list().toSet == okKeys.map(_ + ".out").toSet)
+    (okKeys, bad.map(_.getString(0)).toSeq)
+  }
 
   test("cp identity round-trips binary content incl NULs and empty") {
     val payloads = Seq(
@@ -60,9 +75,9 @@ class PipeTransformSpec extends AnyFunSuite {
   test("split quarantines exit-0-no-output rows, never drops them") {
     val mixed = PipeTransform.transform(df("ok" -> "x".getBytes), Seq("cp"))
       .union(PipeTransform.transform(df("silent" -> "x".getBytes), Seq("true")))
-    val (ok, bad) = PipeTransform.split(mixed)
-    assert(ok.collect().map(_.getString(0)).toSeq == Seq("ok"))
-    assert(bad.collect().map(_.getString(0)).toSeq == Seq("silent"))
+    val (ok, bad) = publishSplit(mixed)
+    assert(ok == Seq("ok"))
+    assert(bad == Seq("silent"))
   }
 
   test("split treats a null-output exit-0 row from any producer as failure") {
@@ -70,9 +85,9 @@ class PipeTransformSpec extends AnyFunSuite {
     val rows = java.util.Arrays.asList(
       Row("a", "b".getBytes, 0, null), Row("weird", null, 0, null))
     val d = spark.createDataFrame(rows, PipeTransform.outputSchema)
-    val (ok, bad) = PipeTransform.split(d)
-    assert(ok.collect().map(_.getString(0)).toSeq == Seq("a"))
-    assert(bad.collect().map(_.getString(0)).toSeq == Seq("weird"))
+    val (ok, bad) = publishSplit(d)
+    assert(ok == Seq("a"))
+    assert(bad == Seq("weird"))
   }
 
   test("stderr of failing command is captured") {
@@ -86,9 +101,9 @@ class PipeTransformSpec extends AnyFunSuite {
     val mixed = PipeTransform.transform(
       df("ok" -> "x".getBytes), Seq("cp"))
       .union(PipeTransform.transform(df("bad" -> "x".getBytes), Seq("false")))
-    val (ok, bad) = PipeTransform.split(mixed)
-    assert(ok.collect().map(_.getString(0)).toSeq == Seq("ok"))
-    assert(bad.collect().map(_.getString(0)).toSeq == Seq("bad"))
+    val (ok, bad) = publishSplit(mixed)
+    assert(ok == Seq("ok"))
+    assert(bad == Seq("bad"))
   }
 
   test("hung command is killed at the timeout and routes to failure") {
@@ -104,11 +119,11 @@ class PipeTransformSpec extends AnyFunSuite {
     assert(out(0).isNullAt(1))
     assert(out(0).getString(3).contains("timed out"))
     assert(elapsedS < 30, s"kill took ${elapsedS}s — timeout not enforced")
-    // and split() quarantines it like any other failure
-    val (ok, bad) = PipeTransform.split(PipeTransform.transform(
+    // and publish() quarantines it like any other failure
+    val (ok, bad) = publishSplit(PipeTransform.transform(
       df("hang" -> "x".getBytes),
       Seq("sh", "-c", "sleep 600", "t"), timeoutSec = 1))
-    assert(ok.isEmpty && bad.collect().map(_.getString(0)).toSeq == Seq("hang"))
+    assert(ok.isEmpty && bad == Seq("hang"))
   }
 
   test("timeout kill takes down the whole process tree, not just the wrapper") {

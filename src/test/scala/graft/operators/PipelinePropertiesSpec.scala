@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalacheck.{Arbitrary, Gen}
 import org.scalacheck.rng.Seed
@@ -41,6 +41,10 @@ class PipelinePropertiesSpec extends AnyFunSuite {
       java.util.Arrays.asList(files.toSeq.map(f => Row(f._1, f._2)): _*),
       inSchema)
 
+  private def publish(results: DataFrame, dir: String): Unit =
+    assert(graft.sinks.NamedSink.publish(results, dir, ".out").collect()
+      .forall(_.getBoolean(3)))
+
   // file names: short, safe charset, distinct; content: arbitrary bytes
   private val genName: Gen[String] = for {
     n <- Gen.choose(1, 12)
@@ -72,10 +76,8 @@ class PipelinePropertiesSpec extends AnyFunSuite {
       val dup = once.union(once) // every job delivered twice
       val dir1 = Files.createTempDirectory("graft-prop1-").toString
       val dir2 = Files.createTempDirectory("graft-prop2-").toString
-      graft.sinks.NamedSink.write(
-        PipeTransform.transform(once, Seq("cp")), dir1, ".out")
-      graft.sinks.NamedSink.write(
-        PipeTransform.transform(dup, Seq("cp")), dir2, ".out")
+      publish(PipeTransform.transform(once, Seq("cp")), dir1)
+      publish(PipeTransform.transform(dup, Seq("cp")), dir2)
       def listing(d: String) = Paths.get(d).toFile.list().toSet
       assert(listing(dir1) == listing(dir2))
       // and contents equal (duplicate delivery overwrote atomically)
@@ -90,9 +92,9 @@ class PipelinePropertiesSpec extends AnyFunSuite {
     forAll(genFiles) { files =>
       val results = PipeTransform.transform(toDf(files), Seq("cp"))
       val dir = Files.createTempDirectory("graft-prop3-").toString
-      graft.sinks.NamedSink.write(results, dir, ".out")
+      publish(results, dir)
       val first = Paths.get(dir).toFile.list().toSet
-      graft.sinks.NamedSink.write(results, dir, ".out")
+      publish(results, dir)
       assert(Paths.get(dir).toFile.list().toSet == first)
       assert(first == files.keySet.map(_ + ".out"))
     }

@@ -32,8 +32,12 @@ class S3StubSpec extends AnyFunSuite {
     val rows = Seq(("a.txt", "alpha"), ("b/tricky.txt", "beta"),
       ("c.txt", ""))
       .map { case (k, v) => (k, v.getBytes("UTF-8")) }
-    NamedSink.write(rows.toDF("key", "output"), "s3stub://sink/out",
-      ".res")
+    val published = NamedSink.publish(
+      rows.toDF("key", "output")
+        .select(col("key"), col("output"), lit(0).as("exitCode"),
+          lit(null).cast("string").as("error")),
+      "s3stub://sink/out", ".res").collect()
+    assert(published.length == 3 && published.forall(_.getBoolean(3)))
     val fs = new Path("s3stub://sink/").getFileSystem(
       spark.sessionState.newHadoopConf())
     def readAll(p: String): String = {

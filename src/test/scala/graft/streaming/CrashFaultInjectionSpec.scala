@@ -496,9 +496,9 @@ class CrashFaultInjectionSpec extends AnyFunSuite {
         import spark.implicits._
         val out = s"$root/named"
         val results = (0 until 6)
-          .map(i => (s"key-$i", s"out-$i".getBytes("UTF-8")))
-          .toDF("key", "output")
-        Seq(() => NamedSink.write(results, out, ".out"))
+          .map(i => (s"key-$i", s"out-$i".getBytes("UTF-8"), 0, null: String))
+          .toDF("key", "output", "exitCode", "error")
+        Seq(() => { NamedSink.publish(results, out, ".out").collect(); () })
       },
       root => {
         val fs = new org.apache.hadoop.fs.Path(root)

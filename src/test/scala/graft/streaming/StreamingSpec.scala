@@ -66,6 +66,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(out + "_quarantine").count() == quar.size)
   }
 
+  test("a two-micro-batch drain spawns the command once per named file") {
+    val in = Files.createTempDirectory("graft-sin-")
+    val queue = Files.createTempDirectory("graft-q-")
+    val out = Files.createTempDirectory("graft-sout-").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    val counter = Files.createTempDirectory("graft-spawn-")
+      .resolve("stream.count")
+    // 12 one-envelope queue files: maxFilesPerTrigger (10) splits the
+    // drain into two micro-batches
+    val names = (0 until 12).map(i => f"f$i%02d.txt")
+    names.foreach { n =>
+      Files.write(in.resolve(n), s"body of $n".getBytes)
+      Files.write(queue.resolve(s"$n.jsonl"),
+        s"""["process","b","i/","o/","$n"]""".getBytes)
+    }
+    val q = JobStream.runWorker(spark, queue.toString, in.toString, out,
+      ckpt, graft.SpawnCounter.command(counter),
+      trigger = Trigger.AvailableNow())
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty, q.exception)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    assert(graft.SpawnCounter.spawns(counter) == names.size)
+    names.foreach(n => assert(
+      new String(Files.readAllBytes(Paths.get(out, n + ".out"))) ==
+        s"body of $n"))
+  }
+
   test("statNames: bulk listStatus path agrees exactly with the " +
     "per-file path (present / empty / absent / dir-named / nested)") {
     val in = Files.createTempDirectory("graft-stat-")
@@ -78,13 +105,30 @@ class StreamingSpec extends AnyFunSuite {
       Files.write(in.resolve(s"w$i.dat"), ("d" * i).getBytes))
     val base = new org.apache.hadoop.fs.Path(in.toString)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    // narrow batch (< threshold): per-file stats
-    val narrow = JobStream.statNames(fs, base,
-      Array("a.txt", "empty.bin", "adir", "gone.txt", "sub/n.txt")).toMap
+    // narrow batch (< threshold): ONE metadata call per name (one
+    // HEAD per job on an object store)
+    var calls = 0
+    val counting = new org.apache.hadoop.fs.FilterFileSystem(fs) {
+      import org.apache.hadoop.fs.{FileStatus, Path, RemoteIterator}
+      override def getFileStatus(p: Path): FileStatus = {
+        calls += 1; super.getFileStatus(p)
+      }
+      override def listStatus(p: Path): Array[FileStatus] = {
+        calls += 1; super.listStatus(p)
+      }
+      override def listStatusIterator(p: Path): RemoteIterator[FileStatus] = {
+        calls += 1; super.listStatusIterator(p)
+      }
+    }
+    val narrowNames =
+      Array("a.txt", "empty.bin", "adir", "gone.txt", "sub/n.txt")
+    val narrow = JobStream.statNames(counting, base, narrowNames).toMap
     assert(narrow == Map(
       "a.txt" -> Some(1L), "empty.bin" -> Some(0L),
       "adir" -> None, // a directory is not a servable input object
       "gone.txt" -> None, "sub/n.txt" -> Some(2L)))
+    assert(calls == narrowNames.length,
+      s"$calls metadata calls for ${narrowNames.length} names")
     // wide batch (>= threshold in the base dir): ONE listStatus, and
     // the answers must be bit-identical to the per-file path
     val wide = (1 to 40).map(i => s"w$i.dat").toArray ++
