@@ -26,27 +26,18 @@ object Engine {
       .appName(appName)
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      // default ON (runtime re-plan, skew handling, coalesce);
-      // SPARK_GRAFT_AQE=false is a measurement knob — AQE runs every
-      // shuffle stage as its own job, so job-overhead-bound paths
-      // (micro-batch sinks) can be profiled without the amplification
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // AQE on: runtime re-plan, skew handling, partition coalescing
+      // (measured faster than AQE off on the whole suite)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // A/B measurement knobs (experiments; defaults = Spark defaults)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "67108864"))
-      .config("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("SPARK_GRAFT_WSCG", "true"))
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_COMMITTER", "1"))
+      // Spark's own default, spelled in bytes: unset, the conf reads
+      // back "67108864b"
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864")
+      // FileOutputCommitter's default too, but only a JobConf loads it
+      // (mapred-default.xml); set, the session's Hadoop conf carries it
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs",
-        sys.env.getOrElse("SPARK_GRAFT_SUCCESS_MARKER", "true"))
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_DISCOVERY_THRESHOLD", "32"))
+        "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // fresh per-process warehouse: the default ./spark-warehouse
@@ -59,21 +50,6 @@ object Engine {
     spark
   }
 
-  /** Release every localCheckpoint'd RDD still registered with the
-    * context (caller-managed `persist` caches are left alone). The
-    * dedup/similarity pipelines materialize intermediate frames via
-    * localCheckpoint; those blocks belong to the one query invocation
-    * and are garbage the moment its action finishes, but only
-    * ContextCleaner would ever reclaim them. A harness that runs MANY
-    * queries in one session (Bench, Verify) must call this between
-    * queries or the accumulated blocks crowd executor storage —
-    * measured: d07 went 28 s -> 5 s at sf0.1 once the backlog of
-    * prior queries' blocks stopped leaking.
-    *
-    * Only safe BETWEEN top-level actions: unpersisting a
-    * localCheckpoint'd RDD discards its only copy (lineage is
-    * truncated), so frames from before the call must not be reused.
-    */
   def widenIfNarrow(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     // Widen tiny local scans to the session parallelism WITHOUT
@@ -117,6 +93,21 @@ object Engine {
     if (narrow) df.repartition(target) else df
   }
 
+  /** Release every localCheckpoint'd RDD still registered with the
+    * context (caller-managed `persist` caches are left alone). The
+    * dedup/similarity pipelines materialize intermediate frames via
+    * localCheckpoint; those blocks belong to the one query invocation
+    * and are garbage the moment its action finishes, but only
+    * ContextCleaner would ever reclaim them. A harness that runs MANY
+    * queries in one session (Bench, Verify) must call this between
+    * queries or the accumulated blocks crowd executor storage —
+    * measured: d07 went 28 s -> 5 s at sf0.1 once the backlog of
+    * prior queries' blocks stopped leaking.
+    *
+    * Only safe BETWEEN top-level actions: unpersisting a
+    * localCheckpoint'd RDD discards its only copy (lineage is
+    * truncated), so frames from before the call must not be reused.
+    */
   def releaseCheckpoints(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values
       .filter(org.apache.spark.rdd.GraftRddUtil.isLocallyCheckpointed)

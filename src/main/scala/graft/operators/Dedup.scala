@@ -1780,15 +1780,11 @@ object Dedup {
     var i = 0
     var converged = false
     while (i < maxIters && !converged) {
-      val t0 = System.nanoTime()
       val next = round(round(
         reps.select(col("id"), col("rep").as("oldRep"), col("rep"))))
         .localCheckpoint()
       val changed = next.filter(col("rep") =!= col("oldRep"))
         .limit(1).count()
-      if (sys.env.contains("GRAFT_PROF"))
-        System.err.println(f"[clusterReps] double-round at i=$i: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s, changed=$changed")
       // Dataset.unpersist only evicts CacheManager entries — a no-op
       // for localCheckpoint blocks, which live as RDD storage. Free
       // the superseded generation's blocks through the underlying

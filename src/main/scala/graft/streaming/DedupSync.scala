@@ -58,19 +58,9 @@ import graft.operators.Dedup
   */
 object DedupSync {
 
-  /** Phase-level wall-clock prints for the ladder's slope autopsy —
-    * off unless SPARK_GRAFT_PHASE_TIMING is set, so the gate and
-    * bench never pay (or print) anything.
-    */
+  /** Labels the jobs a sink phase submits (see [[TableSync.phase]]). */
   private[streaming] def phase[A](label: String)(body: => A): A =
     TableSync.phase(label)(body)
-
-  /** Small SEED batches take the driver-resolved branch unless
-    * SPARK_GRAFT_SEED_LOCAL=false — a measurement knob (A/B the two
-    * value-identical seed paths), never a correctness one.
-    */
-  private[streaming] val seedLocalEnabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_SEED_LOCAL", "true") != "false"
 
   /** Default split trigger for the index: ARMED at 1 GB/bucket, not
     * off — a long-lived stream should never rediscover the frozen-
@@ -345,8 +335,7 @@ object DedupSync {
         val rows = newIdx.limit(smallBatchRows + 1).collect()
         if (rows.length <= smallBatchRows) Some(rows.toSeq) else None
       }
-    // the fully distributed derivation (large batches; also the
-    // SPARK_GRAFT_SEED_LOCAL=false measurement arm for small seeds)
+    // the fully distributed derivation (every batch smallRows leaves None)
     def distributedOut(): DocsOut = {
       // the batch's probe keys feed the pruned read AND the sidecar
       // append — derived once
@@ -372,10 +361,10 @@ object DedupSync {
       DocsOut(pairs, newKeys)
     }
     val out: DocsOut = smallRows match {
-      case Some(idxRows) if applied.isEmpty && seedLocalEnabled =>
+      case Some(idxRows) if applied.isEmpty =>
         seedDocsLocal(spark, newIdx, idxRows, threshold, eNumHashes,
           bands, maxBucketSize)
-      case Some(idxRows) if applied.nonEmpty =>
+      case Some(idxRows) =>
         smallDocsProbe(spark, newIdx, idxRows, indexPath, keysPath,
           batchId, applied.max, threshold, eNumHashes, bands,
           maxBucketSize, payloadBucketBytes)
@@ -671,8 +660,6 @@ object DedupSync {
           .drop("ver")
           .localCheckpoint() // refinement rounds + 3 probe subtrees
         var probeIx = phase("p_pruned_read") { readOnce() }
-        if (sys.env.contains("SPARK_GRAFT_PHASE_TIMING"))
-          println(s"[phase] p_cand cand=${candRows.size}")
         // coverage gate — every candidate id is committed (the
         // sidecar read is capped at lastApplied, so a crashed
         // attempt's written-ahead rows never resolve) and must fetch

@@ -153,24 +153,20 @@ object TableSync {
     else s"${ref.substring(0, i)}/$BucketCol=${ref.substring(i + 1)}"
   }
 
-  /** Env-gated phase wall-clock prints (SPARK_GRAFT_PHASE_TIMING) —
-    * the ONE copy of the ladder-autopsy timer every streaming sink
-    * shares; off (zero cost, zero output) unless the env var is set.
+  /** Runs `body` with `label` as the Spark job description, so every
+    * job a sink phase submits carries its phase name to any listener
+    * or event log; the caller's description is restored afterwards.
+    * The one phase-labelling helper every streaming sink shares.
     */
-  private[streaming] def phase[A](label: String)(body: => A): A =
-    if (sys.env.contains("SPARK_GRAFT_PHASE_TIMING")) {
-      // label the phase's jobs too (guide §1.5) so a job-level
-      // profiler attributes them; restore the caller's description
-      val sc = org.apache.spark.sql.SparkSession.getActiveSession
-        .map(_.sparkContext)
-      val prev = sc.map(_.getLocalProperty("spark.job.description"))
-      sc.foreach(_.setJobDescription(label))
-      val t0 = System.nanoTime()
-      val r = try body finally
-        sc.foreach(_.setJobDescription(prev.flatMap(Option(_)).orNull))
-      println(f"[phase] $label%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    } else body
+  private[streaming] def phase[A](label: String)(body: => A): A = {
+    val sc = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val prev = sc.map(_.getLocalProperty("spark.job.description"))
+    sc.foreach(_.setJobDescription(label))
+    try body finally
+      sc.foreach(_.setJobDescription(prev.flatMap(Option(_)).orNull))
+  }
 
   /** Default cap on a bucket's DELTA GENERATIONS before a touching
     * batch folds it back to one (merge-on-read, below). 1 degenerates
@@ -425,7 +421,7 @@ object TableSync {
         (cnb, cs, buf.result())
       }
     def phase[A](label: String)(body: => A): A =
-      TableSync.phase("  ts_" + label)(body)
+      TableSync.phase("ts_" + label)(body)
     // Split ids exist only on the SPLIT path (k > 0). On a
     // level-normalizing contraction — (2n, 0) pre-normalizes to
     // (n, n) before its merge steps — the pointer arithmetic makes
@@ -544,10 +540,6 @@ object TableSync {
       .take(splitsPerBatch)
       .map(_._1).toSet
     val foldSet: Set[Int] = foldForced ++ owed ++ refOwed
-    if (sys.env.contains("SPARK_GRAFT_PHASE_TIMING"))
-      println(s"[phase]   ts_sets fold=${foldSet.size} owed=${owed.size} " +
-        s"refOwed=${refOwed.size} batch=${batchBuckets.size} " +
-        s"merges=${mergedPairs.length}")
     val appendSet: Set[Int] = batchBuckets -- foldSet
     val touched = (batchBuckets ++ foldForced ++ refOwed).toSeq.sorted
     // Fresh-directory rule: never overwrite a directory the current
@@ -637,9 +629,6 @@ object TableSync {
     val snap = foldedRows
       .unionByName(appendRows, allowMissingColumns = true)
       .drop(GenCol)
-    phase("snap_compute") {
-      if (sys.env.contains("SPARK_GRAFT_PHASE_TIMING")) snap.count()
-    }
     phase("snap_write") {
       snap.write.mode("overwrite").partitionBy(BucketCol)
         .parquet(s"$path/$snapName")

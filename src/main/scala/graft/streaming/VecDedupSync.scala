@@ -275,11 +275,10 @@ object VecDedupSync {
         if (rows.length <= smallBatchRows) Some(rows.toSeq) else None
       }
     val out: ProbeOut = smallRows match {
-      case Some(idxRows) if applied.isEmpty &&
-          DedupSync.seedLocalEnabled =>
+      case Some(idxRows) if applied.isEmpty =>
         seedLocal(spark, batchIdx, idxRows, batchId, threshold, eBits,
           eTables, eDim, maxBucketSize)
-      case Some(idxRows) if applied.nonEmpty =>
+      case Some(idxRows) =>
         smallProbe(spark, batchIdx, idxRows, indexPath, keysPath,
           membersPath, batchId, applied.max, threshold, eBits, eTables,
           eDim, maxBucketSize, storedSigBits, payloadBucketBytes)
@@ -579,10 +578,6 @@ object VecDedupSync {
             val fetchIds = survReps.unionByName(memberIds)
               .unionByName(batchIds).distinct()
               .localCheckpoint()
-            if (sys.env.contains("SPARK_GRAFT_PHASE_TIMING"))
-              println(s"[phase] v_cand surv=${survReps.count()} " +
-                s"members=${memberIds.count()} " +
-                s"fetch=${fetchIds.count()}")
             def readFetched(): DataFrame = PayloadLog
               .readCurrent(spark, indexPath, fetchIds, lastVer)
               .getOrElse {
@@ -942,9 +937,6 @@ object VecDedupSync {
         def readOnce(): DataFrame = {
           val read =
             if (localFetch) {
-              if (sys.env.contains("SPARK_GRAFT_PHASE_TIMING"))
-                println(s"[phase] v_cand surv=${survRows.size} " +
-                  s"members=${memberRows.size} fetch=${fetchRows.size}")
               PayloadLog.readCurrentLocal(spark, indexPath, fetchLocal,
                   fetchHashes, lastVer, Some(payloadSchema))
                 .orElse {

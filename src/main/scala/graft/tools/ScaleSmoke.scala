@@ -600,8 +600,7 @@ object ScaleSmoke {
     // prefilter's floor: survivors ≈ candidates, every one exactly
     // verified. Failure mode is bounded wall-clock, never driver
     // memory — past MaxDriverSurvivors the batch re-runs the
-    // distributed probe. Run with SPARK_GRAFT_PHASE_TIMING=1 to see
-    // the survivor/fetch counts (v_cand) behind the wall.
+    // distributed probe.
     locally {
       val ix = java.nio.file.Files
         .createTempDirectory("smoke_vsyncadv_ix").toString

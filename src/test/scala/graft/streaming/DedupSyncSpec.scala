@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -624,5 +626,35 @@ class DedupSyncSpec extends AnyFunSuite {
     assert(streamed.exists(p => p._1 == 1L && p._2 == 8L) &&
       streamed.exists(p => p._1 == 4L && p._2 == 8L),
       s"cross-boundary template-A pairs lost under knob drift: $streamed")
+  }
+
+  test("a seed batch labels its jobs with phase names and restores " +
+    "the caller's job description") {
+    val ix = Files.createTempDirectory("dsync-label-ix-").toString
+    val pr = Files.createTempDirectory("dsync-label-pr-").toString
+    val group = s"dsync-label-${System.nanoTime()}"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => descs.add(
+            String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "caller-desc")
+    try {
+      DedupSync.applyDocs(corpus, ix, pr, "text", "doc_id", 0L,
+        threshold = 0.3)
+      assert(sc.getLocalProperty("spark.job.description") == "caller-desc")
+      ListenerBusDrain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val seen = descs.toArray.toSeq.map(_.toString)
+    assert(seen.exists(_.startsWith("p_")),
+      s"no job carried a phase label: $seen")
   }
 }
