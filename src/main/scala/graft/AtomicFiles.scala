@@ -113,6 +113,17 @@ private[graft] object AtomicFiles {
     }
   }
 
+  /** The read twin of [[write]]: the file's UTF-8 text, or None when
+    * it is absent.
+    */
+  def read(fs: FileSystem, path: Path): Option[String] =
+    try {
+      val buf = new Array[Byte](fs.getFileStatus(path).getLen.toInt)
+      val in = fs.open(path)
+      try in.readFully(0, buf) finally in.close()
+      Some(new String(buf, "UTF-8"))
+    } catch { case _: java.io.FileNotFoundException => None }
+
   def write(fs: FileSystem, conf: Configuration, dest: Path,
       payload: Array[Byte]): Unit = {
     // unique tmp name per write: a FIXED sibling would let two

@@ -70,15 +70,8 @@ object AnnIndex {
   private def resolveRoot(spark: SparkSession, path: String): String = {
     val fs = new Path(path).getFileSystem(
       spark.sessionState.newHadoopConf())
-    val p = new Path(path, "_GEN")
-    if (!fs.exists(p)) path
-    else {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(p)
-      try in.readFully(0, buf) finally in.close()
-      s"$path/${new String(buf, "UTF-8").trim}"
-    }
+    graft.AtomicFiles.read(fs, new Path(path, "_GEN"))
+      .fold(path)(g => s"$path/${g.trim}")
   }
 
   private case class Meta(dim: Int, nlist: Int, seed: Long,
@@ -366,19 +359,13 @@ object AnnIndex {
     val fs = new Path(path).getFileSystem(
       spark.sessionState.newHadoopConf())
     val basePath = new Path(path, "_RECALL0")
-    val baseline =
-      if (fs.exists(basePath)) {
-        val len = fs.getFileStatus(basePath).getLen.toInt
-        val buf = new Array[Byte](len)
-        val in = fs.open(basePath)
-        try in.readFully(0, buf) finally in.close()
-        new String(buf, "UTF-8").trim.toDouble
-      } else {
+    val baseline = graft.AtomicFiles.read(fs, basePath)
+      .fold {
         graft.AtomicFiles.write(fs,
           spark.sessionState.newHadoopConf(), basePath,
           recall.toString.getBytes("UTF-8"))
         recall
-      }
+      }(_.trim.toDouble)
     // churn accounting from the metadata sidecars alone (no extra
     // scan): _SEGROWS holds per-segment stored counts (seg 0 = the
     // build — _META.rows is the running TOTAL, updated by append),
@@ -482,18 +469,10 @@ object AnnIndex {
       path: String): Option[Map[Long, Long]] = {
     val fs = new Path(path).getFileSystem(
       spark.sessionState.newHadoopConf())
-    val p = new Path(path, "_SEGROWS")
-    if (!fs.exists(p)) None
-    else {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(p)
-      try in.readFully(0, buf) finally in.close()
-      Some(new String(buf, "UTF-8").trim.split("\n")
-        .filter(_.nonEmpty)
+    graft.AtomicFiles.read(fs, new Path(path, "_SEGROWS"))
+      .map(_.trim.split("\n").filter(_.nonEmpty)
         .map { ln => val a = ln.split(" "); a(0).toLong -> a(1).toLong }
         .toMap)
-    }
   }
 
   /** Cluster the projection by cell before the `partitionBy` write —
@@ -539,13 +518,9 @@ object AnnIndex {
   private def readMeta(spark: SparkSession, path: String): Meta = {
     val fs = new Path(path).getFileSystem(
       spark.sessionState.newHadoopConf())
-    val metaP = new Path(path, "_META")
-    require(fs.exists(metaP), s"no ANN index at $path — run build()")
-    val len = fs.getFileStatus(metaP).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(metaP)
-    try in.readFully(0, buf) finally in.close()
-    parseMeta(new String(buf, "UTF-8"))
+    val meta = graft.AtomicFiles.read(fs, new Path(path, "_META"))
+    require(meta.isDefined, s"no ANN index at $path — run build()")
+    parseMeta(meta.get)
   }
 
   private def loadCentroids(spark: SparkSession,

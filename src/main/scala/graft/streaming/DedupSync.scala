@@ -1,10 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Dedup
+import DedupSink.localDF
+import TableSync.phase
 
 /** Continuous corpus ingestion with ONLINE dedup — the streaming
   * composition of the d10 contract: every micro-batch of documents is
@@ -32,35 +35,12 @@ import graft.operators.Dedup
   * candidates. The corpus text is never re-read or re-hashed, and
   * the index never shuffles.
   *
-  * Storage split, chosen by mutability: the INDEX needs keyed upsert
-  * semantics (a re-ingested id replaces its row) and lives in
-  * TableSync; PAIRS are immutable facts — a pair is emitted in
-  * exactly the batch where its later doc arrives — so they are
-  * APPEND-ONLY parquet, one directory per batch id. The first
-  * DedupSync cut stored pairs through TableSync too, and the ladder
-  * caught why that is wrong at scale: pair keys spread across every
-  * bucket, so each batch's "upsert" re-read and rewrote the entire
-  * accumulated pairs table (O(all pairs ever) per micro-batch). The
-  * append-only form writes only the batch's own pairs.
-  *
-  * Exactly-once across TWO stores without a cross-store transaction:
-  * the INDEX manifest's batch id is the outer commit point, and the
-  * write order is pairs-first, index-second. Replay after
-  * crash-after-index-commit: entry check sees the id applied, no-op.
-  * Replay after crash-between (pairs written, index not): the
-  * recompute sees the same pre-batch index, derives the same pairs
-  * (all hashing deterministic and seeded), and overwrites the same
-  * batch directory — idempotent. The same redelivery discipline as
-  * the reference's visibility timeout (GetJobs.py:37-40 — ack only
-  * after the work is durable). A source-level re-delivery of a doc
-  * in a LATER batch can re-emit a pair; [[readPairs]] max-merges per
-  * pair, so readers never see duplicates.
+  * Its storage, exactly-once commit and read views are the skeleton
+  * it shares with [[VecDedupSync]] ([[DedupSink]]): the INDEX lives in
+  * TableSync (keyed upsert), PAIRS are append-only per batch, and the
+  * index manifest's batch id is the outer commit point.
   */
 object DedupSync {
-
-  /** Labels the jobs a sink phase submits (see [[TableSync.phase]]). */
-  private[streaming] def phase[A](label: String)(body: => A): A =
-    TableSync.phase(label)(body)
 
   /** Default split trigger for the index: ARMED at 1 GB/bucket, not
     * off — a long-lived stream should never rediscover the frozen-
@@ -97,22 +77,6 @@ object DedupSync {
     * identical).
     */
   val DefaultDriverProbeMinIndexBytes: Long = 16L << 20
-
-  /** Mixed-history metadata lookups resolved against the FULL union
-    * schema, cached per indexPath for the life of the JVM — see the
-    * resolution block in [[applyDocs]]. Values are frozen properties
-    * of a live index, so the cache can only go stale if the index is
-    * DELETED AND RECREATED at the same path in the same JVM — which is
-    * why each entry carries the table's bootstrap token
-    * (TableSync.bootstrapToken, stamped write-once at first commit)
-    * and is invalidated on mismatch: an externally rebuilt,
-    * metadata-stripped index (the ParamDegradeSpec fixture shape) must
-    * not be served the PREVIOUS index's cached params. One entry per
-    * path (replaced on rebirth), so no growth over a long stream.
-    */
-  private val fullSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, Map[String, String])]()
 
   /** Start the online-dedup sink over a streaming (id, text) frame.
     *
@@ -156,17 +120,20 @@ object DedupSync {
           compactEvery, maxGens, payloadBucketBytes, smallBatchRows)
       }
       .start()
+  private val NumHashesKey = "graft.minhash.numhashes"
+  private val ShingleKey = "graft.minhash.shinglesize"
+  private val FamilyKey = "graft.minhash.family"
 
   /** One ingestion step; also the batch/backfill entry. Safe to call
     * again with an already-applied batchId (no-op). The batch's text
     * is shingle-hashed exactly ONCE: the dedup index computed here
     * feeds the cross-corpus probe, the within-batch pairs, and the
     * index append. Pairs are stored CANONICAL (id_a < id_b): the
-    * cross probe orients (corpus, batch), so a source that
-    * re-delivers the smaller-id member of an already-emitted pair in
-    * a later batch would otherwise append the reversed orientation —
-    * and [[readPairs]]' merge would return the same unordered pair
-    * twice.
+    * cross probe orients its pairs least/greatest when it generates
+    * them, so a source that re-delivers the smaller-id member of an
+    * already-emitted pair in a later batch cannot append the reversed
+    * orientation — [[readPairs]]' merge would return the same
+    * unordered pair twice.
     */
   def applyDocs(batch: DataFrame, indexPath: String, pairsPath: String,
       textCol: String, idCol: String, batchId: Long,
@@ -186,116 +153,38 @@ object DedupSync {
       s"threshold must be > 0 (got $threshold) — see " +
         "Dedup.incrementalPairs' probe-key contract")
     val spark = batch.sparkSession
+    val sink = DedupSink.Sink("DedupSync", "p", "jaccard", indexPath,
+      pairsPath, numBuckets, maxBucketBytes, splitsPerBatch, maxGens,
+      compactEvery, payloadBucketBytes)
     val applied = TableSync.committedVersions(spark, indexPath)
-    if (applied.exists(_ >= batchId)) {
-      // replayed after commit — no-op. But WARN below the high-water
-      // mark: a genuine foreachBatch replay re-delivers the LAST
-      // uncommitted batch (id == max, or max was committed and the
-      // replay no-ops at max); an id STRICTLY below max means the
-      // caller's batch-id sequence restarted — a stream resumed on a
-      // FRESH checkpoint restarts at 0, and its genuinely new data
-      // would drain through this no-op silently until the ids climb
-      // past the mark. The skip is the documented idempotence
-      // contract (batchId is the exactly-once key); the silence is
-      // not.
-      if (applied.max > batchId)
-        println(s"[DedupSync] skipping batch $batchId below the " +
-          s"table's high-water mark ${applied.max} under $indexPath — " +
-          "if this stream was restarted on a FRESH checkpoint its " +
-          "batch ids restarted and its data is being dropped; resume " +
-          "from the original checkpoint or use a new table path")
-      return
-    }
-    val keysPath = sidecarPath(indexPath)
-    // A LIVE index's derivation params are FROZEN: stored shsets and
-    // sigs were hashed under the bootstrap (numHashes, shingleSize,
-    // family), and a batch derived under different knobs compares
-    // incommensurable spaces — band keys stop colliding and jaccard
-    // over mixed-size shingle sets collapses, so every cross-boundary
-    // near-dup pair silently vanishes (only the fp leg survives).
-    // The sidecar _PARAMS guard cannot repair this class: it rebuilds
-    // BAND KEYS from stored sigs, but the sigs/shsets themselves are
-    // unrecoverable without the original text. So read the stored
-    // params from the index column metadata (the vec side's
-    // storedSigBits discipline — sign at the STORED geometry) and
-    // ignore differing knobs, loudly. Legacy indexes without the
-    // metadata keep the passed knobs, as before.
-    def mmOf(sch: org.apache.spark.sql.types.StructType,
-        key: String): Option[org.apache.spark.sql.types.Metadata] =
-      sch.fields.find(_.name == "sig")
-        .filter(_.metadata.contains(key)).map(_.metadata)
-    lazy val sampleSch = TableSync.sampleSchema(spark, indexPath)
-    val famKey = "graft.minhash.family"
-    // the sampled bucket generation may predate the metadata on a
-    // mixed-history index — consult the full union schema before
-    // defaulting. Planning the full multi-path snapshot scan is a
-    // measurable per-batch constant, so its RESULT is cached per
-    // (indexPath, bootstrap id) for the life of the JVM: a live
-    // index's derivation params are frozen, so the one consult can
-    // never go stale — and a legacy index (no metadata anywhere)
-    // caches its "nothing found" answer instead of re-planning the
-    // snapshot on every batch forever (the r15 advice). The cache is
-    // bypassed whenever the sampled generation carries the metadata
-    // (the steady state for post-freeze indexes).
-    def fullLookup(): Map[String, String] = {
-      // keyed by (path, bootstrap token): a retention-sliding batch id
-      // in the key would leak one entry per batch over a long stream,
-      // while path ALONE served the previous index's params after a
-      // delete + re-bootstrap at the same path in the same JVM when
-      // the new index's sampled generation also lacked metadata (an
-      // externally rebuilt, metadata-stripped index — a supported
-      // input). The token is the table's write-once _BORN marker —
-      // one small-file read per consult, replaced-not-leaked on
-      // rebirth.
-      val token = TableSync.bootstrapToken(spark, indexPath)
-      fullSchemaCache.compute(indexPath, (_, cached) => {
-        if (cached != null && cached._1 == token) cached
-        else {
-        val fullSch = TableSync.readCurrent(spark, indexPath).schema
-        val m = Seq("graft.minhash.numhashes",
-            "graft.minhash.shinglesize")
-          .flatMap(k => mmOf(fullSch, k)
-            .map(md => k -> md.getLong(k).toString)) ++
-          mmOf(fullSch, famKey)
-            .map(md => famKey -> md.getString(famKey))
-        if (m.isEmpty)
-          // both metadata sources lost — the one remaining
-          // silent-divergence window the param freeze left open: a
-          // restart with drifted knobs on such an index reproduces
-          // exactly the incommensurable-space pair loss the freeze
-          // kills. Say so loudly, naming the knobs being assumed.
-          println(s"[DedupSync] index at $indexPath carries NO stored " +
-            "derivation metadata in any generation (legacy or " +
-            "metadata-stripped); assuming the passed knobs " +
-            s"(numHashes=$numHashes, shingleSize=$shingleSize, " +
-            s"family=${hasher.name}) — if the index was built under " +
-            "different knobs, cross-boundary near-dup pairs are " +
-            "silently lost; rebuild the index to freeze its params")
-        (token, m.toMap)
-        }
-      })._2
-    }
-    def storedInt(key: String, passed: Int): Int =
-      if (applied.isEmpty) passed
-      else mmOf(sampleSch, key).map(_.getLong(key).toInt)
-        .orElse(fullLookup().get(key).map(_.toInt)).getOrElse(passed)
-    val eNumHashes = storedInt("graft.minhash.numhashes", numHashes)
-    val eShingle = storedInt("graft.minhash.shinglesize", shingleSize)
+    if (DedupSink.alreadyApplied(sink, applied, batchId)) return
+    val keysPath = sink.keysPath
+    // stored shsets and sigs were hashed under the bootstrap
+    // (numHashes, shingleSize, family); the sidecar marker below
+    // cannot repair drift in those — it rebuilds BAND KEYS from stored
+    // sigs, but the sigs themselves are unrecoverable without the
+    // original text. Legacy indexes without the metadata keep the
+    // passed knobs.
+    val frozen = DedupSink.frozenParams(spark, sink, applied, "sig",
+      Seq(NumHashesKey, ShingleKey, FamilyKey),
+      Seq("numHashes" -> numHashes, "shingleSize" -> shingleSize,
+        "family" -> hasher.name))
+    val eNumHashes = frozen.int(NumHashesKey, numHashes)
+    val eShingle = frozen.int(ShingleKey, shingleSize)
     val eHasher =
-      if (applied.isEmpty) hasher
-      else mmOf(sampleSch, famKey).map(m => Dedup.MinHashFamily
-          .byName(m.getString(famKey)))
-        .orElse(fullLookup().get(famKey).map(Dedup.MinHashFamily.byName))
-        .getOrElse(hasher)
-    if (eNumHashes != numHashes || eShingle != shingleSize ||
-        eHasher != hasher)
-      println(s"[DedupSync] index at $indexPath was hashed with " +
-        s"(numHashes=$eNumHashes, shingleSize=$eShingle, " +
-        s"family=${eHasher.name}); ignoring the differing knobs " +
-        s"passed (numHashes=$numHashes, shingleSize=$shingleSize, " +
-        s"family=${hasher.name}) — a live index's derivation " +
-        "parameters are frozen")
-    ensureSidecarParams(spark, keysPath, eNumHashes, bands)
+      Dedup.MinHashFamily.byName(frozen.string(FamilyKey, hasher.name))
+    DedupSink.warnIgnored(sink, Seq(
+      ("numHashes", eNumHashes, numHashes),
+      ("shingleSize", eShingle, shingleSize),
+      ("family", eHasher.name, hasher.name)))
+    // band keys are xxhash64 folds of (numHashes, bands)-shaped
+    // signature slices: segments written under other parameters hold
+    // keys a probe with the current ones can never resolve, and a
+    // stream restarted with changed knobs would drop every
+    // cross-boundary pair forever (the index itself carries no band
+    // keys)
+    DedupSink.ensureMarker(spark, sink, "_PARAMS", s"$eNumHashes $bands")(
+      _.startsWith("seg_"))
     // consumed by the pairs computation AND the index append
     val newIdx = phase("p_hash_batch") {
       Dedup.dedupIndex(batch, textCol, idCol, eNumHashes,
@@ -324,7 +213,7 @@ object DedupSync {
       TableSync.currentManifest(spark, indexPath).exists(m =>
         m.entries.keySet.subsetOf(m.sizes.keySet) &&
           m.sizes.values.sum < floor)
-    val smallRows: Option[Seq[org.apache.spark.sql.Row]] =
+    val smallRows: Option[Seq[Row]] =
       if (smallBatchRows <= 0) None
       // the committed-bytes floor gates the PROBE trade-off only; a
       // small SEED has no probe and always benefits from the driver
@@ -335,7 +224,8 @@ object DedupSync {
         val rows = newIdx.limit(smallBatchRows + 1).collect()
         if (rows.length <= smallBatchRows) Some(rows.toSeq) else None
       }
-    // the fully distributed derivation (every batch smallRows leaves None)
+    // the fully distributed derivation (every batch smallRows leaves
+    // None, and the small probe's fallback past its survivor cap)
     def distributedOut(): DocsOut = {
       // the batch's probe keys feed the pruned read AND the sidecar
       // append — derived once
@@ -349,8 +239,8 @@ object DedupSync {
             maxBucketSize)
         else {
           val probeIx = phase("p_pruned_read") {
-            prunedProbeIndex(spark, indexPath, keysPath, newKeys,
-              eNumHashes, bands, applied.max, payloadBucketBytes)
+            prunedProbeIndex(spark, sink, newKeys, eNumHashes, bands,
+              applied.max)
           }
           phase("p_pair_compute") {
             Dedup.incrementalPairs(probeIx,
@@ -365,67 +255,23 @@ object DedupSync {
         seedDocsLocal(spark, newIdx, idxRows, threshold, eNumHashes,
           bands, maxBucketSize)
       case Some(idxRows) =>
-        smallDocsProbe(spark, newIdx, idxRows, indexPath, keysPath,
-          batchId, applied.max, threshold, eNumHashes, bands,
-          maxBucketSize, payloadBucketBytes)
+        smallDocsProbe(spark, sink, newIdx, idxRows, applied.max,
+          threshold, eNumHashes, bands, maxBucketSize)(distributedOut())
       case _ => distributedOut()
     }
-    // pairs FIRST (append-only, overwrite of this batch's own
-    // directory — idempotent under replay), then the SIDECAR segment
-    // (also overwrite-idempotent; a sidecar ahead of the index commit
-    // is benign — its keys reference index rows that do not exist
-    // yet, and the pruned read's id semi-join drops them), index LAST
-    // (the outer commit point checked at entry)
-    phase("p_pairs_write") {
-      // preCanonical: every text-sink pair tree now ends in the
-      // canonical merged groupBy(id_a, id_b).max — the within-batch
-      // legs (pairsFromIndex) were canonical already and the cross
-      // legs orient least/greatest at generation (incrementalPairs'
-      // canonical = true above), so the store's canonicalize+merge
-      // pass would re-derive its input through one more full
-      // exchange + agg per micro-batch (the vec sink's r18 change,
-      // applied to the text side; r18 verdict item 5)
-      PairsStore.writeBatch(out.pairs, pairsPath, "jaccard", batchId,
-        preCanonical = true)
-    }
-    graft.FaultPoints.reach("DedupSync.pairs")
-    phase("p_sidecar_write") {
+    DedupSink.commit(spark, sink, batchId, out.pairs,
+        out.batchFrame.getOrElse(newIdx), out.batchRows, out.localIds) {
+      // a sidecar ahead of the index commit is benign: its keys
+      // reference index rows that do not exist yet, and the pruned
+      // read's id semi-join drops them
       phase("p_sw_keys") {
         KeyedLog.append(out.newKeys, keysPath, batchId,
           knownRows = out.keyRows)
       }
       graft.FaultPoints.reach("DedupSync.keys")
-      // the id-keyed point-lookup projection the pruned probe fetches
-      // candidate rows from — version-gated, so writing it ahead of
-      // the commit is invisible until the commit lands
-      phase("p_sw_payload") {
-        PayloadLog.append(out.batchFrame.getOrElse(newIdx)
-            .withColumn("ver", lit(batchId)),
-          indexPath, batchId, payloadBucketBytes,
-          knownRows = out.batchRows)
-      }
-    }
-    // pairs + both sidecars durable at the uncommitted batch id —
-    // all invisible until the index commit below lands
-    graft.FaultPoints.reach("DedupSync.sidecar")
-    phase("p_index_commit") {
-      TableSync.applyBatch(out.batchFrame.getOrElse(newIdx)
-          .withColumn("ver", lit(batchId)),
-        indexPath, "id", "ver", batchId, numBuckets, maxBucketBytes,
-        splitsPerBatch, maxGens, localKeys = out.localIds)
-    }
-    // maintenance cadence, AFTER the outer commit: once the pairs
-    // store holds >= compactEvery generations, fold them. Runs on the
-    // committed state only, so a crash mid-compaction never touches
-    // this batch's exactly-once story (replay sees the id applied and
-    // no-ops; the stale staged dir is swept on the next fold). The
-    // sidecars fold on their own tiered cadences.
-    phase("p_maintenance") {
-      PairsStore.maybeCompact(spark, pairsPath, "jaccard", compactEvery)
+    } {
       KeyedLog.maybeCompact(spark, keysPath, "bk")
-      PayloadLog.maybeCompact(spark, indexPath, payloadBucketBytes)
     }
-    graft.FaultPoints.reach("DedupSync.post")
   }
 
   /** The key sidecar of a dedup index (a sibling directory, derived —
@@ -434,55 +280,17 @@ object DedupSync {
   private[streaming] def sidecarPath(indexPath: String): String =
     indexPath.stripSuffix("/") + "_keys"
 
-  /** Guard the sidecar's DERIVATION PARAMETERS: band keys are
-    * xxhash64 folds of (numHashes, bands)-shaped signature slices, so
-    * segments written under different parameters hold keys a probe
-    * with the current ones can never resolve — a stream restarted
-    * with changed knobs would silently drop every cross-boundary pair
-    * forever (the index itself carries no band keys; the old
-    * full-scan probe re-derived them per batch, which is why this
-    * could not happen before the sidecar). The parameters are
-    * recorded in a `_PARAMS` file next to the segments; on mismatch
-    * (or a legacy sidecar that predates the record and cannot be
-    * verified) the segments are deleted and the probe's existing
-    * backfill path rebuilds them from the committed snapshot at the
-    * current parameters — deterministic, one O(index) pass, loud in
-    * the logs rather than silently wrong.
+  /** One O(index) migration for an index that predates its key
+    * sidecar (or lost it): a bucketed segment of the committed
+    * snapshot's probe keys — deterministic under replay, because it
+    * derives from committed state only.
     */
-  private def ensureSidecarParams(spark: SparkSession, keysPath: String,
-      numHashes: Int, bands: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(keysPath).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val pf = new Path(keysPath, "_PARAMS")
-    val want = s"$numHashes $bands"
-    val recorded: Option[String] =
-      if (!fs.exists(pf)) None
-      else {
-        val len = fs.getFileStatus(pf).getLen.toInt
-        val buf = new Array[Byte](len)
-        val in = fs.open(pf)
-        try in.readFully(0, buf) finally in.close()
-        Some(new String(buf, "UTF-8").trim)
-      }
-    if (recorded.contains(want)) return
-    val segs =
-      if (!fs.exists(new Path(keysPath))) Array.empty[String]
-      else fs.listStatus(new Path(keysPath))
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.startsWith("seg_"))
-    if (segs.nonEmpty) {
-      println(s"[DedupSync] sidecar $keysPath recorded params " +
-        s"${recorded.getOrElse("<none — legacy>")} != current $want; " +
-        s"dropping ${segs.length} segments for rebuild from the " +
-        "committed snapshot")
-      segs.foreach(s => fs.delete(new Path(keysPath, s), true))
-    }
-    // tmp+rename: a torn marker would read as a params MISMATCH and
-    // fire the O(index) sidecar rebuild above on the next probe
-    graft.AtomicFiles.write(fs, spark.sessionState.newHadoopConf(),
-      pf, want.getBytes("UTF-8"))
-  }
+  private def backfillKeys(spark: SparkSession, s: DedupSink.Sink,
+      numHashes: Int, bands: Int, lastApplied: Long): Unit =
+    KeyedLog.appendBucketed(
+      Dedup.probeKeys(DedupSink.readIndex(spark, s.indexPath),
+        numHashes, bands),
+      s.keysPath, "bk", lastApplied)
 
   /** One probe path's output for the shared write tail — the text
     * twin of VecDedupSync.ProbeOut: pairs, the sidecar key rows,
@@ -504,15 +312,10 @@ object DedupSync {
     * pinned by the FORCED-PATH spec.
     */
   private def seedDocsLocal(spark: SparkSession, newIdx: DataFrame,
-      idxRows: Seq[org.apache.spark.sql.Row], threshold: Double,
+      idxRows: Seq[Row], threshold: Double,
       numHashes: Int, bands: Int, maxBucketSize: Int): DocsOut = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
     val idField = newIdx.schema("id")
-    def localDF(schema: StructType, rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(rows.asJava, schema)
-    val localIdx = localDF(newIdx.schema, idxRows)
+    val localIdx = localDF(spark, newIdx.schema, idxRows)
     val keySchema = StructType(Seq(
       idField.copy(name = "id"), StructField("bk", LongType)))
     val keyRows: Seq[Row] = phase("p_probe_keys") {
@@ -530,10 +333,10 @@ object DedupSync {
       // jobs are the cheaper shape here.
       Dedup.pairsFromIndex(localIdx, threshold, numHashes, bands,
         maxBucketSize),
-      localDF(keySchema, keyRows),
+      localDF(spark, keySchema, keyRows),
       keyRows = keyRows.size.toLong,
       batchRows = idxRows.size.toLong,
-      localIds = Some(localDF(idSchema,
+      localIds = Some(localDF(spark, idSchema,
         idxRows.map(r => Row(r.get(idIx))).distinct)),
       batchFrame = Some(localIdx))
   }
@@ -547,52 +350,34 @@ object DedupSync {
     * verification is [[Dedup.incrementalPairs]] unchanged (with its
     * internal barriers deferred to the one pairs-write job).
     * Candidates collect under [[VecDedupSync.MaxDriverSurvivors]];
-    * past the cap the batch re-runs the distributed path.
+    * past the cap the batch runs `distributed` instead.
     *
-    * Coverage gate (r13 advice): every candidate id EXCEPT the
-    * batch's own (a crash-replay's sidecar rows may legitimately
-    * reference uncommitted ids) is committed state and must fetch a
-    * current payload row; on a gap the payload log reseeds from the
-    * committed snapshot — loud, never a silently shrunken candidate
-    * set.
+    * Coverage gate: every candidate id is committed state (the
+    * sidecar read is capped at lastApplied, so a crashed attempt's
+    * written-ahead rows never resolve; this includes the batch's own
+    * re-ingested ids, whose committed rows are as loseable as
+    * anyone's) and must fetch a current payload row
+    * ([[DedupSink.pointFetch]]).
     */
-  private def smallDocsProbe(spark: SparkSession, newIdx: DataFrame,
-      idxRows: Seq[org.apache.spark.sql.Row], indexPath: String,
-      keysPath: String, batchId: Long, lastApplied: Long,
+  private def smallDocsProbe(spark: SparkSession, s: DedupSink.Sink,
+      newIdx: DataFrame, idxRows: Seq[Row], lastApplied: Long,
       threshold: Double, numHashes: Int, bands: Int,
-      maxBucketSize: Int, payloadBucketBytes: Long): DocsOut = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    def localDF(schema: StructType, rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(rows.asJava, schema)
-    def distributed(): DocsOut = {
-      val newKeys = phase("p_probe_keys") {
-        Dedup.probeKeys(newIdx, numHashes, bands).localCheckpoint()
-      }
-      val probeIx = phase("p_pruned_read") {
-        prunedProbeIndex(spark, indexPath, keysPath, newKeys,
-          numHashes, bands, lastApplied, payloadBucketBytes)
-      }
-      DocsOut(phase("p_pair_compute") {
-        Dedup.incrementalPairs(probeIx, newIdx, threshold, numHashes,
-          bands, maxBucketSize, canonical = true)
-      }, newKeys)
-    }
+      maxBucketSize: Int)(distributed: => DocsOut): DocsOut = {
     val idField = newIdx.schema("id")
-    val localIdx = localDF(newIdx.schema, idxRows)
+    val localIdx = localDF(spark, newIdx.schema, idxRows)
     val keySchema = StructType(Seq(
       idField.copy(name = "id"), StructField("bk", LongType)))
     val keyRows: Seq[Row] = phase("p_probe_keys") {
       Dedup.probeKeys(localIdx, numHashes, bands).collect().toSeq
     }
-    val newKeysLocal = localDF(keySchema, keyRows)
     val idIx = newIdx.schema.fieldIndex("id")
-    val batchIdSet: Set[Any] = idxRows.map(_.get(idIx)).toSet
     val idSchema = StructType(Seq(idField.copy(name = "id")))
-    val batchIdsLocal = localDF(idSchema,
-      batchIdSet.toSeq.map(Row(_)))
-    val bkLocal = localDF(
+    val batchIdsLocal = localDF(spark, idSchema,
+      idxRows.map(_.get(idIx)).distinct.map(Row(_)))
+    def out(pairs: DataFrame) = DocsOut(pairs,
+      localDF(spark, keySchema, keyRows), keyRows.size.toLong,
+      idxRows.size.toLong, Some(batchIdsLocal), Some(localIdx))
+    val bkLocal = localDF(spark,
       StructType(Seq(StructField("bk", LongType))),
       keyRows.map(r => Row(r.getLong(1))).distinct)
     val bkHashes: Set[Long] = phase("p_s_bkh") {
@@ -600,36 +385,24 @@ object DedupSync {
         .select(KeyedLog.keyHashCol(col("bk")).as("h"))
         .collect().map(_.getLong(0)).toSet
     }
+    // maxSeg = lastApplied: segments a crashed attempt wrote ahead of
+    // its index commit drop at the source, so candidate ids are
+    // COMMITTED by construction
     def sidecar() = phase("p_s_sidecar") {
-      // maxSeg = lastApplied: segments a crashed attempt wrote ahead
-      // of its index commit drop at the source, so candidate ids are
-      // COMMITTED by construction and the coverage gate below covers
-      // re-ingested batch ids too (previously blanket-excluded, which
-      // left a committed-row loss behind a same-batch re-ingest
-      // undetectable)
-      KeyedLog.readForHashes(spark, keysPath, bkHashes, Some(keySchema),
-        maxSeg = lastApplied)
+      KeyedLog.readForHashes(spark, s.keysPath, bkHashes,
+        Some(keySchema), maxSeg = lastApplied)
     }
-    val sc = sidecar().orElse {
-      // index predates the sidecar: one O(index) backfill migration
-      KeyedLog.appendBucketed(
-        Dedup.probeKeys(
-          TableSync.readCurrent(spark, indexPath).drop("ver"),
-          numHashes, bands),
-        keysPath, "bk", lastApplied)
+    sidecar().orElse {
+      backfillKeys(spark, s, numHashes, bands, lastApplied)
       sidecar()
-    }
-    sc match {
+    } match {
       case None =>
         // empty committed index: nothing to probe against — the
         // within-batch pairs are the whole answer
-        DocsOut(
-          phase("p_pair_compute") {
-            Dedup.pairsFromIndex(localIdx, threshold, numHashes,
-              bands, maxBucketSize, materialize = identity)
-          },
-          newKeysLocal, keyRows.size.toLong, idxRows.size.toLong,
-          Some(batchIdsLocal), Some(localIdx))
+        out(phase("p_pair_compute") {
+          Dedup.pairsFromIndex(localIdx, threshold, numHashes,
+            bands, maxBucketSize, materialize = identity)
+        })
       case Some(scDf) =>
         val candRows: Seq[Row] = phase("p_cand_resolve") {
           scDf.join(broadcast(bkLocal), Seq("bk"), "left_semi")
@@ -638,8 +411,8 @@ object DedupSync {
             .collect().toSeq
         }
         if (candRows.size > VecDedupSync.MaxDriverSurvivors)
-          return distributed()
-        val fetchLocal = localDF(idSchema, candRows)
+          return distributed
+        val fetchLocal = localDF(spark, idSchema, candRows)
         val fetchHashes: Set[Long] = phase("p_s_fetchh") {
           fetchLocal
             .select(KeyedLog.keyHashCol(col("id")).as("h"))
@@ -647,47 +420,23 @@ object DedupSync {
         }
         val payloadSchema = StructType(
           newIdx.schema.fields :+ StructField("ver", LongType))
-        def readOnce(): DataFrame = PayloadLog
-          .readCurrentLocal(spark, indexPath, fetchLocal, fetchHashes,
-            lastApplied, Some(payloadSchema))
-          .getOrElse {
-            // index predates the payload log: one-shot migration
-            PayloadLog.backfill(spark, indexPath, lastApplied,
-              payloadBucketBytes)
-            PayloadLog.readCurrentLocal(spark, indexPath, fetchLocal,
-              fetchHashes, lastApplied, Some(payloadSchema)).get
-          }
-          .drop("ver")
-          .localCheckpoint() // refinement rounds + 3 probe subtrees
-        var probeIx = phase("p_pruned_read") { readOnce() }
-        // coverage gate — every candidate id is committed (the
-        // sidecar read is capped at lastApplied, so a crashed
-        // attempt's written-ahead rows never resolve) and must fetch
-        // a current row; this includes the batch's own re-ingested
-        // ids, whose committed rows are as loseable as anyone's. One
-        // anti-join existence probe over the cached fetch (no driver
-        // transfer of the candidate-sized id set).
-        val wantRows = candRows
-        if (wantRows.nonEmpty) {
-          val gap = localDF(idSchema, wantRows)
-            .join(probeIx.select(col("id")), Seq("id"), "left_anti")
-          if (phase("p_s_gate") { !gap.isEmpty }) {
-            println(s"[DedupSync] payload log under $indexPath is " +
-              "missing committed candidate rows (partial restore?) " +
-              "— reseeding from the committed snapshot")
-            PayloadLog.backfill(spark, indexPath, lastApplied,
-              payloadBucketBytes)
-            probeIx = phase("p_pruned_read") { readOnce() }
+        // the fetched frame feeds the refinement rounds and the three
+        // probe subtrees; the gate is one anti-join existence probe
+        // over it (no driver transfer of the candidate-sized id set)
+        val probeIx = DedupSink.pointFetch(spark, s, lastApplied)(() =>
+          PayloadLog.readCurrentLocal(spark, s.indexPath, fetchLocal,
+            fetchHashes, lastApplied, Some(payloadSchema))) { fetched =>
+          candRows.nonEmpty && phase("p_s_gate") {
+            !fetchLocal
+              .join(fetched.select(col("id")), Seq("id"), "left_anti")
+              .isEmpty
           }
         }
-        DocsOut(
-          phase("p_pair_compute") {
-            Dedup.incrementalPairs(probeIx, localIdx, threshold,
-              numHashes, bands, maxBucketSize,
-              materialize = identity, canonical = true)
-          },
-          newKeysLocal, keyRows.size.toLong, idxRows.size.toLong,
-          Some(batchIdsLocal), Some(localIdx))
+        out(phase("p_pair_compute") {
+          Dedup.incrementalPairs(probeIx, localIdx, threshold,
+            numHashes, bands, maxBucketSize,
+            materialize = identity, canonical = true)
+        })
     }
   }
 
@@ -707,31 +456,22 @@ object DedupSync {
     * key-filtered down to).
     *
     * An index that PREDATES a sidecar (no segments on disk) backfills
-    * it here from the committed snapshot — one O(index) migration
-    * pass writing a bucketed segment, deterministic under replay
-    * because it derives from committed state only.
+    * it here ([[backfillKeys]]).
     */
-  private def prunedProbeIndex(spark: SparkSession, indexPath: String,
-      keysPath: String, newKeys: DataFrame, numHashes: Int,
-      bands: Int, lastApplied: Long,
-      payloadBucketBytes: Long): DataFrame = {
+  private def prunedProbeIndex(spark: SparkSession, s: DedupSink.Sink,
+      newKeys: DataFrame, numHashes: Int, bands: Int,
+      lastApplied: Long): DataFrame = {
     val probeK = newKeys.select(col("bk")).distinct()
     // maxSeg: written-ahead sidecar segments of a crashed attempt
     // drop at the source (see smallDocsProbe)
-    val sidecar = KeyedLog.readForKeys(spark, keysPath, probeK, "bk",
-        maxSeg = lastApplied)
-      .orElse {
-        KeyedLog.appendBucketed(
-          Dedup.probeKeys(
-            TableSync.readCurrent(spark, indexPath).drop("ver"),
-            numHashes, bands),
-          keysPath, "bk", lastApplied)
-        KeyedLog.readForKeys(spark, keysPath, probeK, "bk",
-          maxSeg = lastApplied)
-      }
-    sidecar match {
+    def sidecar() = KeyedLog.readForKeys(spark, s.keysPath, probeK, "bk",
+      maxSeg = lastApplied)
+    sidecar().orElse {
+      backfillKeys(spark, s, numHashes, bands, lastApplied)
+      sidecar()
+    } match {
       case None => // empty committed index (e.g. an empty first batch)
-        TableSync.readCurrent(spark, indexPath).drop("ver")
+        DedupSink.readIndex(spark, s.indexPath)
       case Some(sc) =>
         // candidate-sized, consumed twice (the payload kb collect and
         // the semi-join): materialize once or the sidecar multi-path
@@ -739,196 +479,43 @@ object DedupSync {
         val candIds = sc.join(probeK, Seq("bk"), "left_semi")
           .select(col("id")).distinct()
           .localCheckpoint()
-        def readOnce(): DataFrame = PayloadLog
-          .readCurrent(spark, indexPath, candIds, lastApplied)
-          .getOrElse {
-            // index predates the payload log: one-shot migration from
-            // the committed snapshot, then the point read serves
-            PayloadLog.backfill(spark, indexPath, lastApplied,
-              payloadBucketBytes)
-            PayloadLog.readCurrent(spark, indexPath, candIds,
-              lastApplied).get
+        // coverage gate, distributed twin of smallDocsProbe's: one
+        // anti-join existence probe over two checkpointed
+        // candidate-sized frames
+        DedupSink.pointFetch(spark, s, lastApplied)(() =>
+          PayloadLog.readCurrent(spark, s.indexPath, candIds,
+            lastApplied)) { fetched =>
+          phase("p_gate") {
+            !candIds.join(fetched.select(col("id")), Seq("id"), "left_anti")
+              .isEmpty
           }
-          .drop("ver")
-          .localCheckpoint() // candidate-sized; consumed by the
-                             // probe's several subtrees
-        var probeIx = readOnce()
-        // coverage gate, distributed twin of smallDocsProbe's: every
-        // candidate id the sidecar names is committed (the read is
-        // capped at lastApplied — a crash replay's written-ahead rows
-        // never resolve) and must fetch a current row. A payload log
-        // that lost segments (partial restore) otherwise silently
-        // shrinks the candidate set forever. One anti-join existence
-        // probe over two checkpointed candidate-sized frames.
-        val gap = candIds
-          .join(probeIx.select(col("id")), Seq("id"), "left_anti")
-        if (phase("p_gate") { !gap.isEmpty }) {
-          println(s"[DedupSync] payload log under $indexPath is " +
-            "missing committed candidate rows (partial restore?) " +
-            "— reseeding from the committed snapshot")
-          PayloadLog.backfill(spark, indexPath, lastApplied,
-            payloadBucketBytes)
-          probeIx = readOnce()
         }
-        probeIx
     }
   }
 
-  /** The accumulated near-dup pairs view. Max-merged per pair: a
-    * source-level re-delivery of a doc in a later batch re-emits its
-    * pairs (identical values, canonical orientation), and the merge
-    * collapses them.
+  /** The accumulated near-dup pairs view (id_a, id_b, jaccard),
+    * max-merged per pair ([[DedupSink.readPairs]]).
     */
   def readPairs(spark: SparkSession, path: String): DataFrame =
-    PairsStore.read(spark, path, "jaccard")
+    DedupSink.readPairs(spark, path, "jaccard")
 
   /** The live index view (what the next batch probes). */
   def readIndex(spark: SparkSession, path: String): DataFrame =
-    TableSync.readCurrent(spark, path).drop("ver")
+    DedupSink.readIndex(spark, path)
 
   /** The KEEP/DROP decision view — what a training-set consumer
-    * actually wants from online dedup: connected components over the
-    * accumulated pairs (the c04 discipline: min id per cluster is
-    * the keep), joined back to the live index so EVERY ingested doc
-    * gets a decision (singletons keep themselves). Computed on read:
-    * decisions are global facts that can change as later arrivals
-    * bridge clusters, so materializing them per batch would rewrite
-    * history — the view derives from the two stores that are
-    * maintained incrementally. Identical to one-shot
-    * `dedupCorpus` keeps on the same corpus (spec-pinned).
+    * actually wants from online dedup ([[DedupSink.readKeepDecisions]]).
+    * Identical to one-shot `dedupCorpus` keeps on the same corpus
+    * (spec-pinned).
     */
   def readKeepDecisions(spark: SparkSession, indexPath: String,
-      pairsPath: String): DataFrame = {
-    val ids = readIndex(spark, indexPath).select(col("id"))
-    Dedup.clusterReps(ids, readPairs(spark, pairsPath))
-      .select(col("id"), col("rep").as("keep"),
-        (col("id") === col("rep")).as("is_rep"))
-  }
+      pairsPath: String): DataFrame =
+    DedupSink.readKeepDecisions(spark, indexPath, pairsPath, "jaccard")
 
-  /** Maintenance fold for the pairs store: one `batch=N` directory
-    * accumulates per micro-batch FOREVER (the append-only layout's
-    * honest cost), so a long-lived stream ends up with thousands of
-    * small directories. This merges every existing generation —
-    * numeric batch dirs and previous compactions alike — into one
-    * `batch=c<gen>` directory holding the max-merged pair set, then
-    * deletes the sources.
-    *
-    * Crash-safe and replay-compatible by construction:
-    *  - the merged output is STAGED under an `_`-prefixed temp dir
-    *    (invisible to Spark readers) and renamed into place — atomic
-    *    on HDFS/local FS; on object stores (S3A) rename is copy+
-    *    delete, but partial visibility there is still benign because
-    *    [[readPairs]] max-merges whatever subset of the generation is
-    *    visible alongside the intact sources;
-    *  - a crash between the rename and the source deletes leaves
-    *    sources + compaction coexisting — [[readPairs]] max-merges,
-    *    so the view is unchanged, and re-running compaction converges;
-    *  - a batch replayed AFTER compaction (crash-between: its pairs
-    *    were folded but its index commit never landed) rewrites its
-    *    own `batch=N` directory as usual; the pair values are
-    *    deterministic, so the copies collapse in the merge. The
-    *    overwrite-idempotence contract is untouched because the
-    *    compacted generation lives under a name no batch id can
-    *    collide with.
+  /** Maintenance fold for the pairs store ([[DedupSink.compact]]):
+    * merges every `batch=` generation into one. Runs on its own
+    * cadence after each commit (`compactEvery`).
     */
   def compactPairs(spark: SparkSession, path: String): Unit =
-    PairsStore.compact(spark, path, "jaccard")
-}
-
-/** Shared machinery of the append-only pair stores (text DedupSync's
-  * jaccard pairs, VecDedupSync's cosine pairs): one overwrite-
-  * idempotent `batch=N` parquet directory per committed batch,
-  * max-merged on read, folded into `batch=c<gen>` generations on a
-  * cadence. See [[DedupSync.compactPairs]]'s scaladoc for the
-  * crash-safety contract — it holds verbatim for every value column.
-  */
-private[graft] object PairsStore {
-
-  /** Max-merged (id_a, id_b, valueCol) view over every generation. */
-  def read(spark: SparkSession, path: String, valueCol: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col(valueCol)).as(valueCol))
-
-  /** Canonicalize + merge + write one batch's pairs (idempotent:
-    * overwrites its own directory only).
-    *
-    * `preCanonical = true` skips the least/greatest + groupBy(max)
-    * pass for callers whose pair tree PROVABLY already ends in the
-    * canonical merged form (id_a < id_b on every leg, one row per
-    * pair via a final groupBy-max) — the vec sink's
-    * [[graft.operators.Dedup.incrementalVecPairs]] /
-    * `vecPairsFromIndex` outputs. For those the extra pass was one
-    * full exchange + aggregation of the batch's pair set per
-    * micro-batch that re-derived exactly its input (the least/
-    * greatest projection destroys the child agg's partitioning info,
-    * so Spark cannot reuse the exchange). The text sink keeps the
-    * default: incrementalPairs' cross legs are (corpus id, batch id)
-    * oriented by contract, not canonical.
-    */
-  def writeBatch(pairs: DataFrame, path: String, valueCol: String,
-      batchId: Long, preCanonical: Boolean = false): Unit =
-    (if (preCanonical) pairs.select(col("id_a"), col("id_b"), col(valueCol))
-     else pairs
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col(valueCol))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col(valueCol)).as(valueCol)))
-      .write.mode("overwrite").parquet(s"$path/batch=$batchId")
-
-  def compact(spark: SparkSession, path: String, valueCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    if (!fs.exists(new Path(path))) return
-    val all = fs.listStatus(new Path(path)).filter(_.isDirectory)
-      .map(_.getPath.getName)
-    // a crash BEFORE the rename leaves a stale staged dir that no
-    // later call would otherwise touch once dirs.length <= 1 — sweep
-    // them first so the early return can't preserve garbage forever
-    all.filter(_.startsWith("_compact_tmp_"))
-      .foreach(d => fs.delete(new Path(path, d), true))
-    val dirs = all.filter(_.startsWith("batch="))
-    if (dirs.length <= 1) return // nothing to fold
-    val gen = dirs.map(_.stripPrefix("batch="))
-      .collect { case g if g.startsWith("c") => g.drop(1).toLong }
-      .maxOption.getOrElse(0L) + 1
-    val tmp = new Path(path, s"_compact_tmp_c$gen")
-    read(spark, path, valueCol)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // staged fold durable under the reader-invisible prefix
-    graft.FaultPoints.reach("PairsStore.staged")
-    // one rename: readers switch from N sources to one generation
-    // with no window where neither is visible (atomic on HDFS/local;
-    // copy+delete on object stores, where max-merge keeps any
-    // partially-visible state correct)
-    if (!fs.rename(tmp, new Path(path, s"batch=c$gen")))
-      throw new IllegalStateException(
-        s"compaction rename failed under $path (generation c$gen)")
-    // fold published; sources still present (max-merge tolerates both)
-    graft.FaultPoints.reach("PairsStore.folded")
-    dirs.foreach { d =>
-      fs.delete(new Path(path, d), true)
-      graft.FaultPoints.reach("PairsStore.src-delete")
-    }
-  }
-
-  /** The per-batch cadence trigger: fold once the store accumulates
-    * `every` generations. Counts directories, not batch ids — robust
-    * to sparse or restarted id sequences. Runs on committed state
-    * only (call AFTER the outer commit).
-    */
-  def maybeCompact(spark: SparkSession, path: String, valueCol: String,
-      every: Int): Unit = {
-    if (every == Int.MaxValue) return
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val gens =
-      if (!fs.exists(new Path(path))) 0
-      else fs.listStatus(new Path(path))
-        .count(st => st.isDirectory &&
-          st.getPath.getName.startsWith("batch="))
-    if (gens >= every) compact(spark, path, valueCol)
-  }
+    DedupSink.compact(spark, path, "jaccard")
 }

@@ -45,11 +45,12 @@ import org.apache.spark.sql.functions._
   *    level, re-bucketed so each bucket is ~targetBucketBytes. Fold
   *    IO is the size of the folded level only — never the whole log —
   *    so amortized write cost is O(batch x levels) and levels grow
-  *    log-fanout with the log. Crash-safety is the PairsStore
-  *    discipline: stage under `_compact_tmp_`, rename in, delete
-  *    sources; a crash between rename and deletes leaves sources +
-  *    fold coexisting, which readers tolerate (duplicate rows are
-  *    collapsed by the caller's distinct) and re-compaction converges.
+  *    log-fanout with the log. Crash-safety is the pairs-store
+  *    fold's discipline ([[DedupSink.compact]]): stage under
+  *    `_compact_tmp_`, rename in, delete sources; a crash between
+  *    rename and deletes leaves sources + fold coexisting, which
+  *    readers tolerate (duplicate rows are collapsed by the caller's
+  *    distinct) and re-compaction converges.
   *
   * At 100 TB: `targetBucketBytes` is the read-amplification knob — a
   * probe key costs one bucket read per compacted segment, so smaller
@@ -168,26 +169,15 @@ object KeyedLog {
   /** Single-file layout for a bounded L0 segment. coalesce(1)
     * propagates up the plan with no shuffle, so it is only safe when
     * a re-scan of the frame is driver-local or block-cached
-    * (LocalRelation / checkpointed RDD, possibly under projections,
-    * filters or unions of such) — the contract append's callers
+    * ([[TableSync.cheapRescan]]) — the contract append's callers
     * already follow. An UNMATERIALIZED derivation slipped in here
     * would otherwise run its entire upstream in ONE task (r18 advice);
     * it falls back to repartition(1): one tiny shuffle of a bounded
     * segment, upstream parallelism kept.
     */
-  private[streaming] def singleFile(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    def cheap(p: LogicalPlan): Boolean = p match {
-      case _: LocalRelation                           => true
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case pr: Project                                => cheap(pr.child)
-      case f: Filter                                  => cheap(f.child)
-      case u: Union                                   => u.children.forall(cheap)
-      case _                                          => false
-    }
-    if (cheap(df.queryExecution.analyzed)) df.coalesce(1)
+  private[streaming] def singleFile(df: DataFrame): DataFrame =
+    if (TableSync.cheapRescan(df.queryExecution.analyzed)) df.coalesce(1)
     else df.repartition(1)
-  }
 
   /** Write rows directly as a BUCKETED level-1 segment — the
     * backfill/migration path (seeding a sidecar for an index that

@@ -168,6 +168,26 @@ object TableSync {
       sc.foreach(_.setJobDescription(prev.flatMap(Option(_)).orNull))
   }
 
+  /** Whether re-scanning `p` is driver-local or block-cached: a
+    * LocalRelation (the micro-batch driver paths), an already-
+    * checkpointed frame, or projections, filters and unions of those.
+    * An unmaterialized derivation re-runs its whole upstream on every
+    * scan.
+    */
+  private[streaming] def cheapRescan(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    p match {
+      case _: LocalRelation => true
+      case _: org.apache.spark.sql.execution.LogicalRDD => true
+      case pr: Project => cheapRescan(pr.child)
+      case f: Filter => cheapRescan(f.child)
+      case u: Union => u.children.forall(cheapRescan)
+      case _ => false
+    }
+  }
+
   /** Default cap on a bucket's DELTA GENERATIONS before a touching
     * batch folds it back to one (merge-on-read, below). 1 degenerates
     * to fold-every-batch — the copy-on-write behavior of the first
@@ -436,22 +456,9 @@ object TableSync {
     // collect, the folding leg, the append leg) — a raw caller's
     // batch plan (a filtered source scan, or a whole delta aggregate)
     // would be recomputed per consumer. Materialize once, UNLESS the
-    // plan is already cheap to rescan (a LocalRelation from the
-    // micro-batch driver path, or an already-checkpointed frame —
-    // projections/filters over either), where the extra job would be
-    // pure cost. Blocks are released after the commit below.
-    def cheapRescan(
-        p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-        : Boolean = p match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        true
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case pr: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        cheapRescan(pr.child)
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        cheapRescan(f.child)
-      case _ => false
-    }
+    // plan is already cheap to rescan ([[cheapRescan]]), where the
+    // extra job would be pure cost. Blocks are released after the
+    // commit below.
     val bucketed0 = batch.withColumn(BucketCol,
       bucketExpr(keyCol, nbF, sF, hx))
     val ownCheckpoint = !cheapRescan(batch.queryExecution.analyzed)
@@ -794,7 +801,7 @@ object TableSync {
     val (retained, expired) = manifests.partition(n =>
       batchOf(n.stripPrefix(ManifestPrefix)).exists(_ >= batchId - 2))
     val referenced: Set[String] = retained.flatMap { n =>
-      val m = parseManifest(readSmallFile(fs, new Path(path, n)))
+      val m = parseManifest(readFile(fs, new Path(path, n)))
       m.entries.values.flatten.map(refSnap).toSeq :+ m.name
     }.toSet
     expired.foreach(n => fs.delete(new Path(path, n), false))
@@ -929,16 +936,14 @@ object TableSync {
     val fs = new Path(path).getFileSystem(
       spark.sessionState.newHadoopConf())
     val p = new Path(path, BornFile)
-    if (fs.exists(p)) readSmallFile(fs, p)
-    else {
+    graft.AtomicFiles.read(fs, p).getOrElse {
       val cur = new Path(path, "_CURRENT")
-      if (fs.exists(cur))
+      graft.AtomicFiles.read(fs, cur).fold("<legacy:unborn>")(m =>
         // the pointed manifest's NAME (not the full payload — the
         // token is a long-lived cache-key component, and the payload
         // is the whole per-bucket entry map) plus the pointer's mtime
-        s"<legacy:${parseManifest(readSmallFile(fs, cur)).name}" +
-          s":${fs.getFileStatus(cur).getModificationTime}>"
-      else "<legacy:unborn>"
+        s"<legacy:${parseManifest(m).name}" +
+          s":${fs.getFileStatus(cur).getModificationTime}>")
     }
   }
 
@@ -964,9 +969,10 @@ object TableSync {
       m.prev match {
         case None => return None
         case Some(p) =>
-          val f = new Path(path, ManifestPrefix + p)
-          if (!fs.exists(f)) return None
-          m = parseManifest(readSmallFile(fs, f))
+          val prev =
+            graft.AtomicFiles.read(fs, new Path(path, ManifestPrefix + p))
+          if (prev.isEmpty) return None
+          m = parseManifest(prev.get)
       }
     }
     None
@@ -1066,7 +1072,7 @@ object TableSync {
     val name = cur.filter(variants.contains)
       .getOrElse(variants.maxBy(snapOrder))
     readManifest(spark, path, parseManifest(
-      readSmallFile(fs, new Path(path, ManifestPrefix + name))))
+      readFile(fs, new Path(path, ManifestPrefix + name))))
   }
 
   /** Schema of ONE current bucket generation — the cheap path for
@@ -1183,13 +1189,12 @@ object TableSync {
     }
   }
 
-  private def readSmallFile(fs: FileSystem, p: Path): String = {
-    val len = fs.getFileStatus(p).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(p)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, "UTF-8")
-  }
+  /** A metadata file the caller knows exists (listed, or named by a
+    * committed manifest): a missing one fails loudly.
+    */
+  private def readFile(fs: FileSystem, p: Path): String =
+    graft.AtomicFiles.read(fs, p).getOrElse(
+      throw new java.io.FileNotFoundException(s"$p is missing"))
 
   /** The manifest the `_CURRENT` pointer resolves to. None for a
     * never-initialized table — which includes a batch-0 bootstrap in
@@ -1206,7 +1211,7 @@ object TableSync {
     val fs = new Path(path).getFileSystem(
       spark.sessionState.newHadoopConf())
     val cur = new Path(path, "_CURRENT")
-    if (!fs.exists(cur)) {
+    graft.AtomicFiles.read(fs, cur).map(parseManifest).orElse {
       val stray =
         if (!fs.exists(new Path(path))) Array.empty[String]
         else fs.listStatus(new Path(path))
@@ -1219,7 +1224,7 @@ object TableSync {
           s"(${stray.distinct.sorted.mkString(", ")}) — refusing to " +
           "guess; restore the pointer to the intended snapshot")
       None
-    } else Some(parseManifest(readSmallFile(fs, cur)))
+    }
   }
 
   /** Enrich a micro-batch against the CURRENT dimension snapshot —

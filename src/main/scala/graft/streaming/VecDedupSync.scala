@@ -1,12 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
 import graft.functions.VectorFunctions
 import graft.operators.Dedup
+import DedupSink.localDF
+import TableSync.phase
 
 /** Continuous EMBEDDING ingestion with online near-duplicate
   * detection — the vector twin of [[DedupSync]], composing the d13
@@ -19,16 +22,16 @@ import graft.operators.Dedup
   *    atomic commit pointer, time travel, and ONLINE BUCKET
   *    EVOLUTION armed by default (the storage layer widens as the
   *    corpus grows);
-  *  - PAIRS (id_a, id_b, cosine) are immutable facts in the shared
-  *    append-only [[PairsStore]] (one overwrite-idempotent directory
-  *    per batch, max-merged on read, auto-compacted on a cadence).
+  *  - PAIRS (id_a, id_b, cosine) are immutable facts, append-only
+  *    (one overwrite-idempotent directory per batch, max-merged on
+  *    read, auto-compacted on a cadence).
   *
-  * Write order pairs-first / index-second with the index manifest as
-  * the outer commit point: a replay after crash-between recomputes
-  * the same deterministic pairs (signatures are pure splitmix64
-  * functions of the stored vectors), overwrites the same batch
-  * directory, and commits the index — the reference's
-  * ack-after-durable redelivery discipline (GetJobs.py:37-40).
+  * Both stores, the write order (pairs first, index last, the index
+  * manifest as the outer commit point) and the read views are the
+  * skeleton shared with the text sink ([[DedupSink]]). A replay after
+  * a crash before the commit recomputes the same deterministic pairs
+  * (signatures are pure splitmix64 functions of the stored vectors)
+  * and overwrites the same batch directory.
   *
   * Per-batch cost is BATCH-proportional end to end, with the
   * candidate fetch at POINT granularity (the r12 verdict's one
@@ -68,22 +71,6 @@ import graft.operators.Dedup
   */
 object VecDedupSync {
 
-  /** Sidecar row-layout version: "2" = quantized/versioned rows
-    * (tbl, sig, id, ver, del, vq, scale, norm). A log whose segments
-    * predate the marker cannot be version-gated or prefiltered, so it
-    * is dropped and rebuilt from the committed snapshot — one loud
-    * O(index) migration, never a silent wrong probe.
-    */
-  private val LayoutMarker = "_LAYOUT"
-  private val LayoutVersion = "2"
-
-  /** Start the online vector-dedup sink over a streaming (id, vec)
-    * frame. Knob semantics match [[DedupSync.dedupSink]] (storage)
-    * and [[Dedup.incrementalVecDups]] (LSH); `sigBits` is the stored
-    * refinement headroom — it is fixed at bootstrap (recorded in the
-    * index column metadata) and later batches sign at the STORED
-    * depth, so changing the knob never diverges a live index.
-    */
   /** Micro-batch row threshold for the DRIVER-RESOLVED probe path
     * ([[smallProbe]]): at or below it, every batch-shaped frame (key
     * rows, occupancy increments, probe buckets, survivor ids, member
@@ -106,16 +93,18 @@ object VecDedupSync {
     */
   val DefaultSmallBatchRows: Int = 4096
 
-  /** Mixed-history geometry lookups resolved against the FULL union
-    * schema, cached per (indexPath, bootstrap token) for the life of
-    * the JVM — the token (TableSync.bootstrapToken) invalidates the
-    * entry when an index is deleted and recreated at the same path.
-    * See the resolution block in [[applyVecs]] and DedupSync's twin.
-    */
-  private val vecSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, Map[String, Int])]()
+  private val SigBitsKey = "graft.lsh.sigbits"
+  private val BitsKey = "graft.lsh.bits"
+  private val TablesKey = "graft.lsh.tables"
+  private val DimKey = "graft.lsh.dim"
 
+  /** Start the online vector-dedup sink over a streaming (id, vec)
+    * frame. Knob semantics match [[DedupSync.dedupSink]] (storage)
+    * and [[Dedup.incrementalVecDups]] (LSH); `sigBits` is the stored
+    * refinement headroom — it is fixed at bootstrap (recorded in the
+    * index column metadata) and later batches sign at the STORED
+    * depth, so changing the knob never diverges a live index.
+    */
   def vecSink(vecs: DataFrame, indexPath: String, pairsPath: String,
       vecCol: String, idCol: String, checkpoint: String,
       threshold: Double, bits: Int = 4, tables: Int = 12,
@@ -143,7 +132,7 @@ object VecDedupSync {
     * vectors are signed exactly ONCE: the vec index built here feeds
     * the cross-corpus probe, the within-batch pairs, and the index
     * append. Pairs store canonical (id_a < id_b) through
-    * [[PairsStore.writeBatch]].
+    * [[DedupSink.writeBatch]].
     */
   def applyVecs(batch: DataFrame, indexPath: String, pairsPath: String,
       vecCol: String, idCol: String, batchId: Long,
@@ -158,91 +147,36 @@ object VecDedupSync {
       smallBatchRows: Int = DefaultSmallBatchRows)
       : Unit = {
     val spark = batch.sparkSession
+    val sink = DedupSink.Sink("VecDedupSync", "v", "cosine", indexPath,
+      pairsPath, numBuckets, maxBucketBytes, splitsPerBatch, maxGens,
+      compactEvery, payloadBucketBytes)
     val applied = TableSync.committedVersions(spark, indexPath)
-    if (applied.exists(_ >= batchId)) {
-      // replay no-op; loud below the high-water mark (fresh-checkpoint
-      // restart drops data silently otherwise — see DedupSync)
-      if (applied.max > batchId)
-        println(s"[VecDedupSync] skipping batch $batchId below the " +
-          s"table's high-water mark ${applied.max} under $indexPath — " +
-          "if this stream was restarted on a FRESH checkpoint its " +
-          "batch ids restarted and its data is being dropped; resume " +
-          "from the original checkpoint or use a new table path")
-      return
-    }
-    val keysPath = DedupSync.sidecarPath(indexPath)
+    if (DedupSink.alreadyApplied(sink, applied, batchId)) return
+    val keysPath = sink.keysPath
     val membersPath = indexPath.stripSuffix("/") + "_members"
-    ensureSidecarLayout(spark, keysPath)
-    // sign at the STORED geometry when an index exists (a bootstrap
-    // knob change must not diverge refined keys from stored
-    // signatures) — ALL of it, not just the signature depth: stored
-    // sigs were derived under the bootstrap (bits, tables, dim)
-    // planes, so a batch signed under different knobs probes buckets
-    // the stored rows never landed in (tables/dim drift) or masks
-    // bases differently (bits drift) and silently loses every
-    // cross-boundary pair. vecDedupIndex records all four in the sigs
-    // column metadata; read them back and ignore differing knobs,
-    // loudly. sampleSchema reads ONE bucket generation's footer — the
-    // metadata is written by every batch, and planning the full
-    // multi-path snapshot scan just for a schema probe was a
-    // measurable slice of the per-batch constant; a mixed-history
-    // index whose sampled generation predates the metadata (r13
-    // advice) consults the full union schema before defaulting —
-    // planning-only, rare.
-    def lshOf(sch: org.apache.spark.sql.types.StructType,
-        key: String): Option[Int] = sch.fields
-      .find(_.name == "sigs")
-      .filter(_.metadata.contains(key))
-      .map(_.metadata.getLong(key).toInt)
-    lazy val sampleSch = TableSync.sampleSchema(spark, indexPath)
-    // the full-union-schema consult caches its RESULT per (indexPath,
-    // bootstrap id) — frozen params can never go stale, and a legacy
-    // index (no metadata anywhere) must not re-plan the full snapshot
-    // on every batch forever (the r15 advice; DedupSync's cache, the
-    // vec four-key form). The no-metadata case also warns loudly:
-    // it is the one remaining window where a drifted-knob restart
-    // silently diverges the signature space.
-    def fullLookup(): Map[String, Int] = {
-      // keyed by (path, bootstrap token) — see DedupSync's twin for
-      // the leak and staleness rationale: path alone served the
-      // previous index's geometry after a delete + re-bootstrap at
-      // the same path in the same JVM when the reborn index was also
-      // metadata-stripped
-      val token = TableSync.bootstrapToken(spark, indexPath)
-      vecSchemaCache.compute(indexPath, (_, cached) => {
-        if (cached != null && cached._1 == token) cached
-        else {
-        val fullSch = TableSync.readCurrent(spark, indexPath).schema
-        val m = Seq("graft.lsh.sigbits", "graft.lsh.bits",
-            "graft.lsh.tables", "graft.lsh.dim")
-          .flatMap(k => lshOf(fullSch, k).map(k -> _)).toMap
-        if (m.isEmpty)
-          println(s"[VecDedupSync] index at $indexPath carries NO " +
-            "stored geometry metadata in any generation (legacy or " +
-            "metadata-stripped); assuming the passed knobs " +
-            s"(bits=$bits, tables=$tables, dim=$dim; legacy " +
-            "signature depth = bits) — if the index was signed under " +
-            "different knobs, cross-boundary pairs are silently " +
-            "lost; rebuild the index to freeze its geometry")
-        (token, m)
-        }
-      })._2
-    }
-    def storedOpt(key: String): Option[Int] =
-      lshOf(sampleSch, key).orElse(fullLookup().get(key))
-    val (storedSigBits, eBits, eTables, eDim) =
-      if (applied.isEmpty) (sigBits, bits, tables, dim)
-      else (
-        // legacy indexes (no metadata) stored exactly the base bucket
-        storedOpt("graft.lsh.sigbits").getOrElse(bits),
-        storedOpt("graft.lsh.bits").getOrElse(bits),
-        storedOpt("graft.lsh.tables").getOrElse(tables),
-        storedOpt("graft.lsh.dim").getOrElse(dim))
-    if (eBits != bits || eTables != tables || eDim != dim)
-      println(s"[VecDedupSync] index at $indexPath was signed with " +
-        s"(bits=$eBits, tables=$eTables, dim=$eDim); ignoring the " +
-        s"differing knobs passed (bits=$bits, tables=$tables, " +
-        s"dim=$dim) — a live index's LSH geometry is frozen")
+    // sidecar row layout "2" = quantized/versioned rows (tbl, sig, id,
+    // ver, del, vq, scale, norm): segments (and the occupancy counters,
+    // whose absence triggers the rebuild) that predate it cannot be
+    // version-gated or prefiltered
+    DedupSink.ensureMarker(spark, sink, "_LAYOUT", "2")(n =>
+      n.startsWith("seg_") || n.startsWith("_occ_v"))
+    // sign at the STORED geometry when an index exists — ALL of it,
+    // not just the signature depth: stored sigs were derived under the
+    // bootstrap (bits, tables, dim) planes, so a batch signed under
+    // different knobs probes buckets the stored rows never landed in
+    // (tables/dim drift) or masks bases differently (bits drift).
+    // vecDedupIndex records all four in the sigs column metadata.
+    val frozen = DedupSink.frozenParams(spark, sink, applied, "sigs",
+      Seq(SigBitsKey, BitsKey, TablesKey, DimKey),
+      Seq("bits" -> bits, "tables" -> tables, "dim" -> dim))
+    // legacy indexes (no metadata) stored exactly the base bucket
+    val storedSigBits =
+      frozen.int(SigBitsKey, if (applied.isEmpty) sigBits else bits)
+    val eBits = frozen.int(BitsKey, bits)
+    val eTables = frozen.int(TablesKey, tables)
+    val eDim = frozen.int(DimKey, dim)
+    DedupSink.warnIgnored(sink, Seq(("bits", eBits, bits),
+      ("tables", eTables, tables), ("dim", eDim, dim)))
     // An at-least-once source can redeliver the same id TWICE within
     // one micro-batch. The index upsert stores one row per id, but
     // everything derived per-ROW here — sidecar key rows and, most
@@ -256,7 +190,7 @@ object VecDedupSync {
         Window.partitionBy(col(idCol))
           .orderBy(xxhash64(to_json(struct(col(vecCol)))))))
       .filter(col("__rn") === 1).drop("__rn")
-    val batchIdx = DedupSync.phase("v_hash_batch") {
+    val batchIdx = phase("v_hash_batch") {
       Dedup.vecDedupIndex(batchOne, vecCol, idCol, eBits,
         eTables, eDim, storedSigBits).localCheckpoint()
     }
@@ -268,7 +202,7 @@ object VecDedupSync {
     // doubles as the size probe: a big batch reads at most
     // smallBatchRows+1 cached rows, a micro-batch is exactly the
     // collect the fast path needs.
-    val smallRows: Option[Seq[org.apache.spark.sql.Row]] =
+    val smallRows: Option[Seq[Row]] =
       if (smallBatchRows <= 0) None
       else {
         val rows = batchIdx.limit(smallBatchRows + 1).collect()
@@ -279,34 +213,21 @@ object VecDedupSync {
         seedLocal(spark, batchIdx, idxRows, batchId, threshold, eBits,
           eTables, eDim, maxBucketSize)
       case Some(idxRows) =>
-        smallProbe(spark, batchIdx, idxRows, indexPath, keysPath,
-          membersPath, batchId, applied.max, threshold, eBits, eTables,
-          eDim, maxBucketSize, storedSigBits, payloadBucketBytes)
+        smallProbe(spark, sink, batchIdx, idxRows, membersPath, batchId,
+          applied.max, threshold, eBits, eTables, eDim, maxBucketSize,
+          storedSigBits)
       case _ =>
-        largeProbe(spark, batchIdx, indexPath, keysPath, membersPath,
-          batchId, applied, threshold, eBits, eTables, eDim,
-          maxBucketSize, storedSigBits, payloadBucketBytes)
+        largeProbe(spark, sink, batchIdx, membersPath, batchId, applied,
+          threshold, eBits, eTables, eDim, maxBucketSize, storedSigBits)
     }
-    // pairs FIRST (idempotent overwrite of this batch's directory),
-    // then the sidecars + counters (all overwrite-idempotent; a
-    // sidecar or counter file ahead of the index commit is benign —
-    // its rows carry ver = batchId, which the probe's version gate
-    // hides until the commit lands), index LAST (the outer commit
-    // point checked at entry)
-    DedupSync.phase("v_pairs_write") {
-      // preCanonical: every vec pair tree (vecPairsFromIndex,
-      // incrementalVecPairs — both probe paths) ends in the canonical
-      // merged groupBy(id_a, id_b).max with id_a < id_b on every leg,
-      // so the store's canonicalize+merge pass would be a redundant
-      // exchange + agg per batch
-      PairsStore.writeBatch(out.pairs, pairsPath, "cosine", batchId,
-        preCanonical = true)
-    }
-    graft.FaultPoints.reach("VecDedupSync.pairs")
     val newDepths = VecLog.Depths(eBits, storedSigBits,
       Dedup.refineDepths(out.newOcc, maxBucketSize, eBits,
         storedSigBits))
-    DedupSync.phase("v_sidecar_write") {
+    DedupSink.commit(spark, sink, batchId, out.pairs,
+        out.batchFrame.getOrElse(batchIdx), out.batchRows, out.localIds) {
+      // a sidecar row or counter file ahead of the index commit is
+      // benign: its rows carry ver = batchId, which the probe's
+      // version gate hides until the commit lands
       VecLog.append(out.sidecarKeys, keysPath, batchId, newDepths,
         knownRows = out.sidecarRows)
       graft.FaultPoints.reach("VecDedupSync.veclog")
@@ -315,29 +236,11 @@ object VecDedupSync {
       graft.FaultPoints.reach("VecDedupSync.members")
       OccStats.write(spark, keysPath, batchId, out.newOcc)
       graft.FaultPoints.reach("VecDedupSync.occ")
-      // the small path hands back the batch as a LocalRelation —
-      // the append and the commit write from driver rows (single-
-      // task writes, no broadcast/build jobs); identical content
-      PayloadLog.append(out.batchFrame.getOrElse(batchIdx)
-          .withColumn("ver", lit(batchId)),
-        indexPath, batchId, payloadBucketBytes,
-        knownRows = out.batchRows)
+    } {
+      VecLog.maybeCompact(spark, keysPath, newDepths,
+        collapse = vecLogCollapse)
+      KeyedLog.maybeCompact(spark, membersPath, "bk")
     }
-    // all four sidecars durable at the uncommitted batch id —
-    // invisible until the index commit below lands
-    graft.FaultPoints.reach("VecDedupSync.sidecar")
-    DedupSync.phase("v_index_commit") {
-      TableSync.applyBatch(out.batchFrame.getOrElse(batchIdx)
-          .withColumn("ver", lit(batchId)),
-        indexPath, "id", "ver", batchId, numBuckets, maxBucketBytes,
-        splitsPerBatch, maxGens, localKeys = out.localIds)
-    }
-    PairsStore.maybeCompact(spark, pairsPath, "cosine", compactEvery)
-    VecLog.maybeCompact(spark, keysPath, newDepths,
-      collapse = vecLogCollapse)
-    KeyedLog.maybeCompact(spark, membersPath, "bk")
-    PayloadLog.maybeCompact(spark, indexPath, payloadBucketBytes)
-    graft.FaultPoints.reach("VecDedupSync.post")
   }
 
   /** One probe path's output, consumed by the shared write tail:
@@ -358,9 +261,7 @@ object VecDedupSync {
     * type spliced in — one definition for both paths' frames and the
     * tombstone rows.
     */
-  private def keyRowSchema(idField: org.apache.spark.sql.types.StructField)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
+  private def keyRowSchema(idField: StructField): StructType =
     StructType(Seq(
       StructField("tbl", IntegerType),
       StructField("sig", LongType),
@@ -370,7 +271,13 @@ object VecDedupSync {
       StructField("vq", BinaryType),
       StructField("scale", DoubleType),
       StructField("norm", DoubleType)))
-  }
+
+  /** Member-log rows (bk, keep, id): every index row keyed by the
+    * hash of its exact-dup group rep — the survivor-to-member
+    * expansion source.
+    */
+  private def memberLogRows(idx: DataFrame): DataFrame =
+    idx.select(xxhash64(col("keep")).as("bk"), col("keep"), col("id"))
 
   /** WIDE sidecar rows for the batch reps: one row per (rep, table)
     * carrying the full deep signature AND the probe-side payload —
@@ -397,16 +304,16 @@ object VecDedupSync {
     * version-gated currentization, true-cap candidate derivation,
     * int8 prefilter, point fetch, exact verification.
     */
-  private def largeProbe(spark: SparkSession, batchIdx: DataFrame,
-      indexPath: String, keysPath: String, membersPath: String,
+  private def largeProbe(spark: SparkSession, s: DedupSink.Sink,
+      batchIdx: DataFrame, membersPath: String,
       batchId: Long, applied: Seq[Long], threshold: Double,
       bits: Int, tables: Int, dim: Int, maxBucketSize: Int,
-      storedSigBits: Int, payloadBucketBytes: Long): ProbeOut = {
-    val newVecKeys = DedupSync.phase("v_keys") {
+      storedSigBits: Int): ProbeOut = {
+    val (indexPath, keysPath) = (s.indexPath, s.keysPath)
+    val newVecKeys = phase("v_keys") {
       vecKeyRows(batchIdx, batchId).localCheckpoint()
     }
-    val newMemberRows = batchIdx
-      .select(xxhash64(col("keep")).as("bk"), col("keep"), col("id"))
+    val newMemberRows = memberLogRows(batchIdx)
     val baseMask = (1L << bits) - 1
     def bucketCounts(df: DataFrame): Map[(Int, Long), Long] =
       df.select(col("tbl"),
@@ -425,7 +332,7 @@ object VecDedupSync {
         val lastVer = applied.max
         // exact committed-index occupancy — incremental counters, or
         // the one-shot aggregate (+ sidecar backfill) at migration
-        val occ = DedupSync.phase("v_occ_read") {
+        val occ = phase("v_occ_read") {
           OccStats.read(spark, keysPath, lastVer).getOrElse(
             backfillSidecars(spark, indexPath, keysPath, membersPath,
               lastVer, bits, storedSigBits, maxBucketSize))
@@ -454,7 +361,7 @@ object VecDedupSync {
             lit(null).cast("binary").as("vq"),
             lit(null).cast("double").as("scale"),
             lit(null).cast("double").as("norm"))
-        DedupSync.phase("v_codes_read") {
+        phase("v_codes_read") {
           VecLog.readForKeys(spark, keysPath, probesDf, depths)
         } match {
           case None =>
@@ -528,14 +435,8 @@ object VecDedupSync {
               .agg(max(col("unc")).as("unc"), first(col("vq")).as("vq"),
                 first(col("scale")).as("scale"),
                 first(col("norm")).as("norm"))
-            val batchU = batchIdx.filter(col("id") === col("keep"))
-              .select(col("id").as("n_rep"), col("vec"),
-                aggregate(transform(col("vec"),
-                  x => abs(x.cast("double"))),
-                  lit(0.0), (a, x) => a + x).as("n1u"),
-                sqrt(VectorFunctions.dotProduct(col("vec"), col("vec")))
-                  .as("n2u"))
-            val scored = DedupSync.phase("v_quant_filter") {
+            val batchU = repNorms(batchIdx)
+            val scored = phase("v_quant_filter") {
               candPairs.join(broadcast(batchU), Seq("n_rep"))
                 .withColumn("upper", quantUpper)
                 .filter(col("upper") >= least(lit(threshold), lit(1.0)))
@@ -563,9 +464,7 @@ object VecDedupSync {
               // empty would silently drop every cluster member's
               // pairs from this batch on, forever
               KeyedLog.appendBucketed(
-                readIndex(spark, indexPath)
-                  .select(xxhash64(col("keep")).as("bk"),
-                    col("keep"), col("id")),
+                memberLogRows(readIndex(spark, indexPath)),
                 membersPath, "bk", lastVer)
               memberRead().getOrElse(survReps.limit(0))
             }
@@ -578,51 +477,23 @@ object VecDedupSync {
             val fetchIds = survReps.unionByName(memberIds)
               .unionByName(batchIds).distinct()
               .localCheckpoint()
-            def readFetched(): DataFrame = PayloadLog
-              .readCurrent(spark, indexPath, fetchIds, lastVer)
-              .getOrElse {
-                // index predates the payload log: one-shot
-                // migration from the committed snapshot
-                PayloadLog.backfill(spark, indexPath, lastVer,
-                  payloadBucketBytes)
-                PayloadLog.readCurrent(spark, indexPath, fetchIds,
-                  lastVer).get
-              }
-              .drop("ver")
-              .localCheckpoint() // several consumers below
-            val fetched0 = DedupSync.phase("v_pruned_read") {
-              readFetched()
-            }
-            // COVERAGE GATE (r13 advice): survivors and members are
-            // committed state (the member read is capped at lastVer,
-            // so a crashed attempt's written-ahead rows never
-            // resolve — including for this batch's own re-ingested
-            // ids, whose committed rows the gate now covers instead
-            // of blanket-excluding) and must each fetch a current
-            // row — a payload log that lost segments in a partial
-            // restore otherwise shrinks the candidate set with no
-            // failure. One anti-join probe; reseed + re-read on a gap.
-            val fetched = {
-              val committed = survReps.unionByName(memberIds).distinct()
-              val gap = committed
-                .join(fetched0.select(col("id")), Seq("id"), "left_anti")
-              if (gap.isEmpty) fetched0
-              else {
-                println(s"[VecDedupSync] payload log under $indexPath " +
-                  "is missing committed candidate rows (partial " +
-                  "restore?) — reseeding from the committed snapshot")
-                PayloadLog.backfill(spark, indexPath, lastVer,
-                  payloadBucketBytes)
-                readFetched()
-              }
+            // the coverage gate covers survivors and members (the
+            // member read is capped at lastVer, so this batch's own
+            // re-ingested ids are gateable); one anti-join probe
+            val committed = survReps.unionByName(memberIds).distinct()
+            val fetched = DedupSink.pointFetch(spark, s, lastVer)(() =>
+              PayloadLog.readCurrent(spark, s.indexPath, fetchIds,
+                lastVer)) { f =>
+              !committed.join(f.select(col("id")), Seq("id"), "left_anti")
+                .isEmpty
             }
             val rep = replacedRepSigs(fetched)
-            val decs = DedupSync.phase("v_decs") {
+            val decs = phase("v_decs") {
               bucketCounts(rep.select(col("tbl"), col("sig")))
             }
             val candOverride = scored.filter(col("unc") === 1)
               .select(col("id").as("ix_rep"), col("n_rep"))
-            (DedupSync.phase("v_pair_compute") {
+            (phase("v_pair_compute") {
               Dedup.incrementalVecPairs(fetched, batchIdx, threshold,
                 bits, tables, dim, maxBucketSize,
                 occOverride = Some(occ),
@@ -645,6 +516,17 @@ object VecDedupSync {
       VectorFunctions.int8Dot(col("vq"), col("vec")) +
       lit(0.5) * col("scale") * col("n1u")) /
       (col("n2u") * col("norm")) + lit(1e-6)
+
+  /** The batch reps' side of [[quantUpper]]: each rep as `n_rep`
+    * with its exact vector and its L1 (`n1u`) and L2 (`n2u`) norms.
+    */
+  private def repNorms(idx: DataFrame): DataFrame =
+    idx.filter(col("id") === col("keep"))
+      .select(col("id").as("n_rep"), col("vec"),
+        aggregate(transform(col("vec"), x => abs(x.cast("double"))),
+          lit(0.0), (a, x) => a + x).as("n1u"),
+        sqrt(VectorFunctions.dotProduct(col("vec"), col("vec")))
+          .as("n2u"))
 
   /** Cap on the survivor rows the small path will pull to the
     * driver: survivors are normally near-threshold candidates plus
@@ -678,17 +560,12 @@ object VecDedupSync {
     * seed included.
     */
   private def seedLocal(spark: SparkSession, batchIdx: DataFrame,
-      idxRows: Seq[org.apache.spark.sql.Row], batchId: Long,
+      idxRows: Seq[Row], batchId: Long,
       threshold: Double, bits: Int, tables: Int, dim: Int,
       maxBucketSize: Int): ProbeOut = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
     val idField = batchIdx.schema("id")
-    def localDF(schema: StructType, rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(rows.asJava, schema)
-    val localIdx = localDF(batchIdx.schema, idxRows)
-    val keyRows: Seq[Row] = DedupSync.phase("v_keys") {
+    val localIdx = localDF(spark, batchIdx.schema, idxRows)
+    val keyRows: Seq[Row] = phase("v_keys") {
       vecKeyRows(localIdx, batchId).collect().toSeq
     }
     val baseMask = (1L << bits) - 1
@@ -701,12 +578,11 @@ object VecDedupSync {
       Dedup.vecPairsFromIndex(localIdx, threshold, bits, tables, dim,
         maxBucketSize),
       incs,
-      localDF(keyRowSchema(idField), keyRows),
-      localIdx.select(xxhash64(col("keep")).as("bk"), col("keep"),
-        col("id")),
+      localDF(spark, keyRowSchema(idField), keyRows),
+      memberLogRows(localIdx),
       sidecarRows = keyRows.size.toLong,
       batchRows = idxRows.size.toLong,
-      localIds = Some(localDF(idSchema,
+      localIds = Some(localDF(spark, idSchema,
         idxRows.map(r => Row(r.get(idIx))).distinct)),
       batchFrame = Some(localIdx))
   }
@@ -736,37 +612,31 @@ object VecDedupSync {
     * survivors ≤ [[MaxDriverSurvivors]] with a distributed fallback
     * past it.
     */
-  private def smallProbe(spark: SparkSession, batchIdx: DataFrame,
-      idxRows: Seq[org.apache.spark.sql.Row], indexPath: String,
-      keysPath: String, membersPath: String,
+  private def smallProbe(spark: SparkSession, s: DedupSink.Sink,
+      batchIdx: DataFrame, idxRows: Seq[Row], membersPath: String,
       batchId: Long, lastVer: Long, threshold: Double,
       bits: Int, tables: Int, dim: Int, maxBucketSize: Int,
-      storedSigBits: Int, payloadBucketBytes: Long): ProbeOut = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    def distributed() = largeProbe(spark, batchIdx, indexPath,
-      keysPath, membersPath, batchId, Seq(lastVer), threshold, bits,
-      tables, dim, maxBucketSize, storedSigBits, payloadBucketBytes)
+      storedSigBits: Int): ProbeOut = {
+    val (indexPath, keysPath) = (s.indexPath, s.keysPath)
+    def distributed() = largeProbe(spark, s, batchIdx, membersPath,
+      batchId, Seq(lastVer), threshold, bits, tables, dim,
+      maxBucketSize, storedSigBits)
     val idField = batchIdx.schema("id")
     val keySchema = keyRowSchema(idField)
-    def localDF(schema: StructType, rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(rows.asJava, schema)
     val baseMask = (1L << bits) - 1
-    val localIdx = localDF(batchIdx.schema, idxRows)
+    val localIdx = localDF(spark, batchIdx.schema, idxRows)
     // key rows via a LocalRelation projection — zero jobs, identical
     // expressions to the distributed path
-    val keyRows: Seq[Row] = DedupSync.phase("v_keys") {
+    val keyRows: Seq[Row] = phase("v_keys") {
       vecKeyRows(localIdx, batchId).collect().toSeq
     }
-    val newVecKeysLocal = localDF(keySchema, keyRows)
-    val memberRowsLocal = localIdx
-      .select(xxhash64(col("keep")).as("bk"), col("keep"), col("id"))
+    val newVecKeysLocal = localDF(spark, keySchema, keyRows)
+    val memberRowsLocal = memberLogRows(localIdx)
     def countByBucket(ts: Seq[(Int, Long)]): Map[(Int, Long), Long] =
       ts.groupBy { case (t, sg) => (t, sg & baseMask) }
         .map { case (k, v) => k -> v.size.toLong }
     val incs = countByBucket(keyRows.map(r => (r.getInt(0), r.getLong(1))))
-    val occ = DedupSync.phase("v_occ_read") {
+    val occ = phase("v_occ_read") {
       OccStats.read(spark, keysPath, lastVer).getOrElse(
         backfillSidecars(spark, indexPath, keysPath, membersPath,
           lastVer, bits, storedSigBits, maxBucketSize))
@@ -782,8 +652,8 @@ object VecDedupSync {
     // the replaced-rep semi-join look at every re-ingested id — the
     // distributed path's batchIds came from the full batch index too
     val batchIdRows = idxRows.map(r => Row(r.get(idIx))).distinct
-    val batchIdsLocal = localDF(idSchema, batchIdRows)
-    DedupSync.phase("v_codes_read") {
+    val batchIdsLocal = localDF(spark, idSchema, batchIdRows)
+    phase("v_codes_read") {
       VecLog.readForKeysLocal(spark, keysPath, probes, depths,
         Some(keySchema))
     } match {
@@ -818,7 +688,7 @@ object VecDedupSync {
           StructField("tbl", IntegerType),
           StructField("key", LongType),
           idField.copy(name = "n_rep")))
-        val batchKeysLocal = localDF(batchKeySchema,
+        val batchKeysLocal = localDF(spark, batchKeySchema,
           keyRows.map(r => Row(r.getInt(0),
             refOf(r.getInt(0), r.getLong(1)), r.get(2))))
         // every current row of a probed refined bucket joins every
@@ -849,23 +719,24 @@ object VecDedupSync {
         // batch-rep norms via a LocalRelation projection of the same
         // expressions the distributed arm compiles; broadcast as a
         // LocalRelation (no build job)
-        val batchULocal = localIdx.filter(col("id") === col("keep"))
-          .select(col("id").as("n_rep"), col("vec"),
-            aggregate(transform(col("vec"),
-              x => abs(x.cast("double"))),
-              lit(0.0), (a, x) => a + x).as("n1u"),
-            sqrt(VectorFunctions.dotProduct(col("vec"), col("vec")))
-              .as("n2u"))
+        val batchULocal = repNorms(localIdx)
         // ONE probe job: pruned scan -> currentize -> candidate join
         // -> prefilter -> survivors to the driver (ceiling-bounded;
         // the limit guard keeps an adversarial corpus from flooding
-        // the driver — past it the batch re-runs distributed). The
-        // old per-(id, n_rep) merge groupBy is gone: vq/scale/norm
-        // are per-id constants and the prefilter is per-row, so the
+        // the driver — past it the batch re-runs distributed). There
+        // is no per-(id, n_rep) merge before the prefilter, because
+        // this join RELIES ON vq/scale/norm being CONSTANT PER ID
+        // across the currentized rows. Three places keep them so:
+        // `batchOne` in applyVecs keeps one row per id per batch; an
+        // upsert that replaces a rep writes tombstones at its old sigs
+        // (replacedRepSigs / the small path's repSig rows) at the new
+        // version; and the (tbl, id, sig) currentize above keeps only
+        // the newest record per sig. So every live row of an id comes
+        // from its current vector. The prefilter is per-row, so the
         // surviving DISTINCT pair set is unchanged — rows collect
         // with <= tables-fold multiplicity (same driver bound, the
         // guard just trips earlier) and dedupe on the driver below.
-        val scoredRows0: Seq[Row] = DedupSync.phase("v_quant_filter") {
+        val scoredRows0: Seq[Row] = phase("v_quant_filter") {
           joined.join(broadcast(batchULocal), Seq("n_rep"))
             .withColumn("upper", quantUpper)
             .filter(col("upper") >= least(lit(threshold), lit(1.0)))
@@ -882,7 +753,7 @@ object VecDedupSync {
             Row(id, nr, rs.map(_.getInt(2)).max)
           }.toSeq
         val survRows = scoredRows.map(r => Row(r.get(0))).distinct
-        val survLocal = localDF(idSchema, survRows)
+        val survLocal = localDF(spark, idSchema, survRows)
         // member-log bucket hashes of the survivor reps, evaluated
         // driver-side through the log's own hash Column — zero jobs
         val survHashes: Set[Long] = survLocal
@@ -900,9 +771,7 @@ object VecDedupSync {
           // members log missing while keys/occ survive: rebuild from
           // the committed snapshot (largeProbe's defense, shared)
           KeyedLog.appendBucketed(
-            readIndex(spark, indexPath)
-              .select(xxhash64(col("keep")).as("bk"),
-                col("keep"), col("id")),
+            memberLogRows(readIndex(spark, indexPath)),
             membersPath, "bk", lastVer)
           memberRead().getOrElse(survLocal.limit(0))
         }
@@ -914,7 +783,7 @@ object VecDedupSync {
         // payload read prunes on driver-evaluated hashes (one scan
         // job, no checkpoint, no kb collect); past it the union
         // stays distributed (the r13 shape).
-        val memberRows: Seq[Row] = DedupSync.phase("v_members") {
+        val memberRows: Seq[Row] = phase("v_members") {
           memberIds.limit(MaxDriverSurvivors + 1).collect().toSeq
         }
         val payloadSchema = StructType(
@@ -924,7 +793,7 @@ object VecDedupSync {
           if (!localFetch) Seq.empty
           else (memberRows.map(r => Row(r.get(0))) ++
             survRows ++ batchIdRows).distinct
-        lazy val fetchLocal = localDF(idSchema, fetchRows)
+        lazy val fetchLocal = localDF(spark, idSchema, fetchRows)
         lazy val fetchHashes: Set[Long] = fetchLocal
           .select(KeyedLog.keyHashCol(col("id")).as("h"))
           .collect().map(_.getLong(0)).toSet
@@ -934,92 +803,48 @@ object VecDedupSync {
         lazy val distFetchIds = memberIds.unionByName(survLocal)
           .unionByName(batchIdsLocal).distinct()
           .localCheckpoint()
-        def readOnce(): DataFrame = {
-          val read =
-            if (localFetch) {
-              PayloadLog.readCurrentLocal(spark, indexPath, fetchLocal,
-                  fetchHashes, lastVer, Some(payloadSchema))
-                .orElse {
-                  // index predates the payload log: one-shot migration
-                  PayloadLog.backfill(spark, indexPath, lastVer,
-                    payloadBucketBytes)
-                  PayloadLog.readCurrentLocal(spark, indexPath,
-                    fetchLocal, fetchHashes, lastVer,
-                    Some(payloadSchema))
-                }
-            } else {
-              PayloadLog.readCurrent(spark, indexPath, distFetchIds,
-                  lastVer)
-                .orElse {
-                  PayloadLog.backfill(spark, indexPath, lastVer,
-                    payloadBucketBytes)
-                  PayloadLog.readCurrent(spark, indexPath, distFetchIds,
-                    lastVer)
-                }
+        // ONE driver pass per fetched frame over its ids and the
+        // replaced-rep signatures (≤ fetch-set rows; rep sigs only for
+        // the batch's own re-ingested reps): the local arm's coverage
+        // gate reads it, and so does the tail below
+        var metaMemo: Option[(DataFrame, Seq[Row])] = None
+        def fetchedMeta(f: DataFrame): Seq[Row] =
+          metaMemo.collect { case (g, m) if g eq f => m }.getOrElse {
+            val m = phase("v_decs") {
+              f.join(broadcast(batchIdsLocal.withColumn("__b", lit(1))),
+                  Seq("id"), "left")
+                .select(col("id"),
+                  when(col("__b").isNotNull && col("id") === col("keep"),
+                    col("sigs")).as("repsigs"))
+                .collect().toSeq
             }
-          read.get.drop("ver")
-            .localCheckpoint() // replaced-rep collect + verification
-        }
-        var fetched = DedupSync.phase("v_pruned_read") { readOnce() }
-        // ONE driver pass over the fetched ids: coverage gate +
-        // replaced-rep signatures (≤ fetch-set rows; rep sigs only
-        // for the batch's own re-ingested reps)
-        def fetchedMeta(): Seq[Row] = DedupSync.phase("v_decs") {
-          fetched
-            .join(broadcast(batchIdsLocal.withColumn("__b", lit(1))),
-              Seq("id"), "left")
-            .select(col("id"),
-              when(col("__b").isNotNull && col("id") === col("keep"),
-                col("sigs")).as("repsigs"))
-            .collect().toSeq
-        }
-        var meta = fetchedMeta()
-        if (localFetch) {
-          // COVERAGE GATE (r13 advice): every id the keys/members
-          // sidecars resolved is committed state (the member read is
-          // capped at lastVer, so a crashed attempt's written-ahead
-          // rows never resolve — and the batch's own previously-
-          // committed ids are therefore gateable, not blanket-
-          // excluded) and MUST fetch a current row — a payload log
-          // that lost segments in a partial restore otherwise serves
-          // a silently-shrunken candidate set (pairs vanish with no
-          // failure). On a gap, reseed and re-read.
-          val want: Set[Any] =
-            (memberRows.map(_.get(0)) ++ survRows.map(_.get(0))).toSet
-          val got: Set[Any] = meta.map(_.get(0)).toSet
-          if (!want.subsetOf(got)) {
-            println(s"[VecDedupSync] payload log under $indexPath is " +
-              s"missing ${(want -- got).size} committed candidate " +
-              "rows (partial restore?) — reseeding from the committed " +
-              "snapshot")
-            PayloadLog.backfill(spark, indexPath, lastVer,
-              payloadBucketBytes)
-            fetched = DedupSync.phase("v_pruned_read") { readOnce() }
-            meta = fetchedMeta()
+            metaMemo = Some(f -> m)
+            m
           }
-        } else {
-          // the distributed-fetch arm runs the same gate as
-          // largeProbe's: on the largest candidate sets a partial
-          // restore must not silently shrink the set either. One
-          // anti-join probe over the ALREADY-checkpointed fetch set
-          // (batch ids excluded here because distFetchIds unions them
-          // in for the decrement pass; their committed subset is
-          // covered through memberIds/survivors, which the capped
-          // member read keeps sound).
-          val committed = distFetchIds
-            .join(batchIdsLocal, Seq("id"), "left_anti")
-          val gap = committed
-            .join(fetched.select(col("id")), Seq("id"), "left_anti")
-          if (!gap.isEmpty) {
-            println(s"[VecDedupSync] payload log under $indexPath is " +
-              "missing committed candidate rows (partial restore?) " +
-              "— reseeding from the committed snapshot")
-            PayloadLog.backfill(spark, indexPath, lastVer,
-              payloadBucketBytes)
-            fetched = DedupSync.phase("v_pruned_read") { readOnce() }
-            meta = fetchedMeta()
-          }
+        // COVERAGE GATE: every id the keys/members sidecars resolved is
+        // committed state (the member read is capped at lastVer, so the
+        // batch's own previously-committed ids are gateable, not
+        // blanket-excluded). The local arm compares ids on the driver;
+        // the distributed arm runs one anti-join probe over the
+        // ALREADY-checkpointed fetch set, batch ids excluded
+        // (distFetchIds unions them in for the decrement pass; their
+        // committed subset is covered through members/survivors).
+        val fetched = DedupSink.pointFetch(spark, s, lastVer)(() =>
+          if (localFetch)
+            PayloadLog.readCurrentLocal(spark, indexPath, fetchLocal,
+              fetchHashes, lastVer, Some(payloadSchema))
+          else
+            PayloadLog.readCurrent(spark, indexPath, distFetchIds,
+              lastVer)) { f =>
+          if (localFetch)
+            !(memberRows.map(_.get(0)) ++ survRows.map(_.get(0))).toSet
+              .subsetOf(fetchedMeta(f).map(_.get(0)).toSet)
+          else
+            !distFetchIds.join(batchIdsLocal, Seq("id"), "left_anti")
+              .join(f.select(col("id")), Seq("id"), "left_anti")
+              .isEmpty
         }
+        val meta = fetchedMeta(fetched)
         val repSig: Seq[(Int, Long, Any)] = meta.flatMap { r =>
           if (r.isNullAt(1)) Nil
           else r.getSeq[Long](1).zipWithIndex.map { case (sg, t) =>
@@ -1027,20 +852,20 @@ object VecDedupSync {
           }
         }
         val decs = countByBucket(repSig.map(x => (x._1, x._2)))
-        val tombsLocal = localDF(keySchema,
+        val tombsLocal = localDF(spark, keySchema,
           repSig.map { case (t, sg, id) =>
             Row(t, sg, id, batchId, true, null, null, null)
           })
         val candOverrideSchema = StructType(Seq(
           idField.copy(name = "ix_rep"), idField.copy(name = "n_rep")))
-        val candOverrideLocal = localDF(candOverrideSchema,
+        val candOverrideLocal = localDF(spark, candOverrideSchema,
           scoredRows.filter(_.getInt(2) == 1)
             .map(r => Row(r.get(0), r.get(1))))
         // the batch side enters as the LocalRelation (broadcast
         // builds without jobs; identical rows by construction), and
         // the internal rep-pair barrier is skipped — the whole pair
         // tree materializes once, in the pairs write
-        val pairs = DedupSync.phase("v_pair_compute") {
+        val pairs = phase("v_pair_compute") {
           Dedup.incrementalVecPairs(fetched, localIdx, threshold,
             bits, tables, dim, maxBucketSize,
             occOverride = Some(occ),
@@ -1113,50 +938,6 @@ object VecDedupSync {
     if (full) top.filter(!col("del")) else top
   }
 
-  /** Guard the sidecar ROW LAYOUT: segments written by the pre-v2
-    * code lack the version/tombstone/code columns the probe's gates
-    * rest on, so they are dropped (with the occupancy counters, whose
-    * absence triggers the rebuild) and the sidecar regenerates from
-    * the committed snapshot — loud, deterministic, one O(index) pass.
-    */
-  private def ensureSidecarLayout(spark: SparkSession,
-      keysPath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(keysPath).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val pf = new Path(keysPath, LayoutMarker)
-    if (fs.exists(pf)) {
-      val len = fs.getFileStatus(pf).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(pf)
-      try in.readFully(0, buf) finally in.close()
-      if (new String(buf, "UTF-8").trim == LayoutVersion) return
-    }
-    val stale =
-      if (!fs.exists(new Path(keysPath))) Array.empty[String]
-      else fs.listStatus(new Path(keysPath))
-        .map(_.getPath.getName)
-        .filter(n => n.startsWith("seg_") || n.startsWith("_occ_v"))
-    if (stale.nonEmpty) {
-      println(s"[VecDedupSync] sidecar $keysPath predates layout " +
-        s"v$LayoutVersion — dropping ${stale.length} segments/counter " +
-        "files for rebuild from the committed snapshot")
-      stale.foreach(n => fs.delete(new Path(keysPath, n), true))
-    }
-    // tmp+rename: a torn marker would read as a layout MISMATCH and
-    // fire the O(index) sidecar rebuild above on the next probe
-    graft.AtomicFiles.write(fs, spark.sessionState.newHadoopConf(),
-      pf, LayoutVersion.getBytes("UTF-8"))
-  }
-
-  /** Migration for an index that predates the sidecars: derive the
-    * occupancy counters by the one-shot aggregate over the committed
-    * snapshot, and seed BOTH sidecar logs from it as bucketed
-    * segments — one O(index) pass, deterministic under replay
-    * (committed state only). Rows carry their true per-row committed
-    * versions, so the read-side version gate is exact from the first
-    * probe.
-    */
   /** Layout-v2 key rows of a committed snapshot (rows keep their
     * true per-row committed versions) — the backfill/reseed source.
     */
@@ -1172,6 +953,14 @@ object VecDedupSync {
         col("id"), col("ver"), lit(false).as("del"),
         col("vq"), col("scale"), col("norm"))
 
+  /** Migration for an index that predates the sidecars: derive the
+    * occupancy counters by the one-shot aggregate over the committed
+    * snapshot, and seed BOTH sidecar logs from it as bucketed
+    * segments — one O(index) pass, deterministic under replay
+    * (committed state only). Rows carry their true per-row committed
+    * versions, so the read-side version gate is exact from the first
+    * probe.
+    */
   private def backfillSidecars(spark: SparkSession, indexPath: String,
       keysPath: String, membersPath: String, lastVer: Long,
       bits: Int, sigBits: Int, maxBucketSize: Int)
@@ -1189,38 +978,31 @@ object VecDedupSync {
     VecLog.appendBucketed(vecKeys, keysPath, lastVer,
       VecLog.Depths(bits, sigBits,
         Dedup.refineDepths(occ, maxBucketSize, bits, sigBits)))
-    KeyedLog.appendBucketed(
-      cur.select(xxhash64(col("keep")).as("bk"), col("keep"),
-        col("id")),
-      membersPath, "bk", lastVer)
+    KeyedLog.appendBucketed(memberLogRows(cur), membersPath, "bk",
+      lastVer)
     OccStats.write(spark, keysPath, lastVer, occ)
     occ
   }
 
-  /** The accumulated near-dup pairs view (max-merged per pair). */
+  /** The accumulated near-dup pairs view (id_a, id_b, cosine),
+    * max-merged per pair ([[DedupSink.readPairs]]).
+    */
   def readPairs(spark: SparkSession, path: String): DataFrame =
-    PairsStore.read(spark, path, "cosine")
+    DedupSink.readPairs(spark, path, "cosine")
 
   /** The live index view (what the next batch probes). */
   def readIndex(spark: SparkSession, path: String): DataFrame =
-    TableSync.readCurrent(spark, path).drop("ver")
+    DedupSink.readIndex(spark, path)
 
-  /** KEEP/DROP decisions over everything ingested: connected
-    * components over accumulated pairs, min id per cluster keeps,
-    * singletons keep themselves — identical to one-shot
+  /** KEEP/DROP decisions over everything ingested
+    * ([[DedupSink.readKeepDecisions]]) — identical to one-shot
     * `embeddingDupPairs`+clusterReps on the same corpus (spec-pinned).
     */
   def readKeepDecisions(spark: SparkSession, indexPath: String,
-      pairsPath: String): DataFrame = {
-    val ids = readIndex(spark, indexPath).select(col("id"))
-    Dedup.clusterReps(ids, readPairs(spark, pairsPath))
-      .select(col("id"), col("rep").as("keep"),
-        (col("id") === col("rep")).as("is_rep"))
-  }
+      pairsPath: String): DataFrame =
+    DedupSink.readKeepDecisions(spark, indexPath, pairsPath, "cosine")
 
-  /** Maintenance fold for the pairs store (see
-    * [[DedupSync.compactPairs]]).
-    */
+  /** Maintenance fold for the pairs store ([[DedupSink.compact]]). */
   def compactPairs(spark: SparkSession, path: String): Unit =
-    PairsStore.compact(spark, path, "cosine")
+    DedupSink.compact(spark, path, "cosine")
 }

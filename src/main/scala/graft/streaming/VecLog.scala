@@ -183,8 +183,10 @@ object VecLog {
     val parts: Seq[Seq[String]] = segs.map { s =>
       if (s.level == 0) Seq(s"$path/${s.name}")
       else {
-        val d = parseDepths(readSmall(f, new Path(s"$path/${s.name}",
-          DepthsFile)))
+        val depthsFile = new Path(s"$path/${s.name}", DepthsFile)
+        val d = parseDepths(graft.AtomicFiles.read(f, depthsFile)
+          .getOrElse(throw new java.io.FileNotFoundException(
+            s"$depthsFile is missing")))
         val listed: Set[Long] = f.listStatus(new Path(s"$path/${s.name}"))
           .filter(st => st.isDirectory &&
             st.getPath.getName.startsWith(KbCol + "="))
@@ -413,15 +415,6 @@ object VecLog {
       throw new IllegalStateException(
         s"VecLog segment rename failed under $path ($name)")
   }
-
-  private def readSmall(f: org.apache.hadoop.fs.FileSystem,
-      p: Path): String = {
-    val len = f.getFileStatus(p).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = f.open(p)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, "UTF-8")
-  }
 }
 
 /** Exact per-(table, base bucket) REP occupancy counters of a vector
@@ -450,13 +443,7 @@ private[streaming] object OccStats {
   def read(spark: SparkSession, dir: String, ver: Long)
       : Option[Map[(Int, Long), Long]] = {
     val f = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val p = path(dir, ver)
-    if (!f.exists(p)) return None
-    val len = f.getFileStatus(p).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = f.open(p)
-    try in.readFully(0, buf) finally in.close()
-    Some(new String(buf, "UTF-8").trim.split("\n")
+    graft.AtomicFiles.read(f, path(dir, ver)).map(_.trim.split("\n")
       .filter(_.nonEmpty).map(_.split("\t"))
       .map(a => (a(0).toInt, a(1).toLong) -> a(2).toLong).toMap)
   }
