@@ -78,16 +78,9 @@ object Engine {
         // and always paid the extra repartition. The estimate only
         // moves the REPARTITION DECISION, never results — borderline
         // tables just keep or skip a layout exchange.
-        // the file count comes from the index's cached listing;
-        // `inputFiles` builds a path string per file, so it is only
-        // the fallback for other index types
         val nFiles = l.relation match {
           case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            math.max(1L, (f.location match {
-              case p: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =>
-                p.allFiles().size
-              case other => other.inputFiles.length
-            }).toLong)
+            math.max(1L, f.location.inputFiles.length.toLong)
           case _ => 1L
         }
         math.max(1L,

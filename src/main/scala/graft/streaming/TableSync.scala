@@ -1192,7 +1192,7 @@ object TableSync {
   /** A metadata file the caller knows exists (listed, or named by a
     * committed manifest): a missing one fails loudly.
     */
-  private def readFile(fs: FileSystem, p: Path): String =
+  private[streaming] def readFile(fs: FileSystem, p: Path): String =
     graft.AtomicFiles.read(fs, p).getOrElse(
       throw new java.io.FileNotFoundException(s"$p is missing"))
 

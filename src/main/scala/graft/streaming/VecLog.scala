@@ -183,10 +183,8 @@ object VecLog {
     val parts: Seq[Seq[String]] = segs.map { s =>
       if (s.level == 0) Seq(s"$path/${s.name}")
       else {
-        val depthsFile = new Path(s"$path/${s.name}", DepthsFile)
-        val d = parseDepths(graft.AtomicFiles.read(f, depthsFile)
-          .getOrElse(throw new java.io.FileNotFoundException(
-            s"$depthsFile is missing")))
+        val d = parseDepths(TableSync.readFile(f,
+          new Path(s"$path/${s.name}", DepthsFile)))
         val listed: Set[Long] = f.listStatus(new Path(s"$path/${s.name}"))
           .filter(st => st.isDirectory &&
             st.getPath.getName.startsWith(KbCol + "="))

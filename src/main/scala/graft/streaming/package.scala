@@ -2,9 +2,13 @@ package graft
 
 package object streaming {
 
-  /** The append-only pairs store's entry points ([[DedupSink.writeBatch]],
-    * [[DedupSink.readPairs]], [[DedupSink.compact]]) under the name
-    * the specs' crash-between fixtures write batches through.
+  /** Test-only: the name VecDedupSyncSpec's crash-between fixtures
+    * write batches through. Nothing in the library uses it; it goes
+    * once that spec calls [[DedupSink.writeBatch]] directly. Unlike
+    * the old `PairsStore.writeBatch`, whose default canonicalized and
+    * max-merged the pairs, [[DedupSink.writeBatch]] writes the pairs
+    * as given, so callers must pass canonical pairs (as
+    * `Dedup.incrementalVecPairs` returns them).
     */
   private[streaming] val PairsStore: DedupSink.type = DedupSink
 }
