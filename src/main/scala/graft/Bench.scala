@@ -286,8 +286,8 @@ object Bench {
     java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_LINE.json"),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
     println(s"""{"total":${f(total)},"n":${results.size},""" +
       s""""probe_idle":${f(idleRef)},"line_file":"BENCH_LINE.json"}""")
+    spark.stop()
   }
 }

@@ -31,13 +31,10 @@ object IncrementalAgg {
   /** Merge aggregate state (key, `n`, `tot`) with a delta-aggregated
     * batch (key, `dn`, `ds`). Column names are positional contracts:
     * state carries (n, tot), delta carries (dn, ds); output carries
-    * (key, n, tot). With `keepDeaths` the count-zero groups stay as
-    * tombstone rows instead of dropping — required by sinks (AggSync)
-    * whose storage upserts by key and cannot unwrite a row; readers
-    * filter `n > 0`.
+    * (key, n, tot); count-zero groups drop.
     */
   def mergeCountSum(state: DataFrame, delta: DataFrame,
-      key: String, keepDeaths: Boolean = false): DataFrame = {
+      key: String): DataFrame = {
     val zeroTot: Column = lit(0).cast(state.schema("tot").dataType)
     val zeroDs: Column = lit(0).cast(delta.schema("ds").dataType)
     val merged = state.join(delta, Seq(key), "full_outer")
@@ -54,11 +51,11 @@ object IncrementalAgg {
           .cast(state.schema("tot").dataType).as("tot"))
     // A negative merged count can only mean the caller fed deletes
     // for rows the state never contained: fail the job, don't mask.
-    val checked = merged.withColumn("n",
+    merged.withColumn("n",
       when(col("n") < 0L,
         raise_error(concat(lit("IncrementalAgg: negative count for key "),
           col(key).cast("string")))).otherwise(col("n")))
-    if (keepDeaths) checked else checked.filter(col("n") > 0L)
+      .filter(col("n") > 0L)
   }
 
   /** Pre-aggregate a raw batch into the KMV delta shape: per key, the

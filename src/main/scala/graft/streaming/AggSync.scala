@@ -11,14 +11,12 @@ import graft.operators.IncrementalAgg
   * the bucketed snapshot+manifest machinery (atomic commit pointer,
   * crash replay, time travel, sub-table rewrite).
   *
-  * Per micro-batch the work is proportional to the BATCH, never the
-  * view: the batch delta-aggregates locally (map-side combine), the
-  * current state is read for the touched keys' buckets only
-  * (TableSync.readCurrentForKeys — <= min(|batch keys|, numBuckets)
-  * bucket dirs), and the key-local merge upserts only those keys'
-  * buckets back. At 100 TB of accumulated view this is the difference
-  * between a rollup you can afford per micro-batch and one you
-  * cannot: O(|delta| + touched buckets), not O(table).
+  * The sink never reads its state: a batch delta-aggregates locally
+  * and lands as one more generation of each touched bucket. Count/sum
+  * and KMV are commutative, so the table records `CountSum`/`Kmv(k)`
+  * as its [[TableSync.Merge]], which TableSync's maxGens bucket fold
+  * and merge-on-read (readCurrent, readVersion, the views below)
+  * apply. Per micro-batch the work is O(|delta|), never O(view).
   *
   * Exactly-once: the fold is NOT idempotent (re-folding a batch
   * double-counts), so the manifest's batch id is the commit point. A
@@ -59,53 +57,38 @@ object AggSync {
       maxBucketBytes: Long = DedupSync.DefaultMaxBucketBytes,
       splitsPerBatch: Int = TableSync.DefaultSplitsPerBatch,
       maxGens: Int = TableSync.DefaultMaxGens): Unit = {
-    val spark = batch.sparkSession
-    val applied = TableSync.committedVersions(spark, path)
-    if (applied.exists(_ >= batchId)) {
-      // replay no-op; loud below the high-water mark (fresh-checkpoint
-      // restart drops data silently otherwise — see DedupSync)
-      if (applied.max > batchId)
-        println(s"[AggSync] skipping batch $batchId below the table's " +
-          s"high-water mark ${applied.max} under $path — if this " +
-          "stream was restarted on a FRESH checkpoint its batch ids " +
-          "restarted and its data is being dropped; resume from the " +
-          "original checkpoint or use a new table path")
-      return
-    }
-    // The delta aggregate is <= |batch keys| rows but its lineage is
-    // the whole batch scan, and FOUR downstream actions replay it
-    // (touched-bucket collects, the state semi-join, the snapshot
-    // write). Materialize once — the fold then reads the batch
-    // exactly once, which is the O(|delta| + touched buckets)
-    // contract (ladder-measured: the 10-key batch-1 fold read SLOWER
-    // than the full seed before this).
-    val delta = batch.groupBy(col(keyCol))
-      .agg(count(lit(1)).as("dn"),
-        sum(col(valCol).cast("decimal(12,2)")).as("ds"))
-      .localCheckpoint()
-    val state =
-      if (applied.isEmpty)
-        delta.select(col(keyCol), col("dn").as("n"), col("ds").as("tot"))
-          .limit(0)
-      else
-        TableSync.readCurrentForKeys(
-            spark, path, delta.select(col(keyCol)), keyCol)
-          .join(delta.select(col(keyCol)), Seq(keyCol), "left_semi")
-          .select(col(keyCol), col("n"), col("tot"))
-    val merged = IncrementalAgg
-      .mergeCountSum(state, delta, keyCol, keepDeaths = true)
-    TableSync.applyBatch(merged.withColumn("ver", lit(batchId)),
-      path, keyCol, "ver", batchId, numBuckets, maxBucketBytes,
-      splitsPerBatch, maxGens)
+    // <= |batch keys| rows, materialized once inside applyBatch
+    if (!alreadyApplied(batch, path, batchId))
+      TableSync.applyMerged(TableSync.Merge.CountSum)(
+        batch.groupBy(col(keyCol))
+          .agg(count(lit(1)).as("n"),
+            sum(col(valCol).cast("decimal(12,2)")).as("tot"))
+          .withColumn("ver", lit(batchId)),
+        path, keyCol, "ver", batchId, numBuckets, maxBucketBytes,
+        splitsPerBatch, maxGens)
   }
 
-  /** The live view: tombstoned (count-zero) groups filtered out, the
-    * storage version column dropped.
+  /** The manifest's batch id is the commit point: a replayed batch is
+    * a no-op, loud below the high-water mark (a fresh-checkpoint
+    * restart drops data silently otherwise — see DedupSync).
+    */
+  private def alreadyApplied(batch: DataFrame, path: String,
+      batchId: Long): Boolean = {
+    val applied = TableSync.committedVersions(batch.sparkSession, path)
+    if (applied.exists(_ > batchId))
+      println(s"[AggSync] skipping batch $batchId below the table's " +
+        s"high-water mark ${applied.max} under $path — if this " +
+        "stream was restarted on a FRESH checkpoint its batch ids " +
+        "restarted and its data is being dropped; resume from the " +
+        "original checkpoint or use a new table path")
+    applied.exists(_ >= batchId)
+  }
+
+  /** The live view: the summed state, storage version column dropped
+    * (every group has n >= 1 — a delta counts rows, never retracts).
     */
   def readView(spark: SparkSession, path: String): DataFrame =
-    TableSync.readCurrent(spark, path)
-      .filter(col("n") > 0L)
-      .drop("ver")
+    TableSync.readCurrent(spark, path).drop("ver")
 
   // ------------------------------------------------------------------
   // Maintained DISTINCT-count view — q50's KMV bottom-k sketch as the
@@ -115,8 +98,8 @@ object AggSync {
   // bottom-k(bottom-k(A) ∪ bottom-k(B)), so the fold is lossless —
   // the maintained sketch is bit-identical to a from-scratch pass
   // (c33's oracle proves exactly this). State is <= k int64s per key,
-  // per-batch cost O(|delta| + touched buckets); KMV is INSERT-ONLY
-  // (sketches cannot retract), unlike the count/sum fold above.
+  // per-batch cost O(|delta|); KMV is INSERT-ONLY (sketches cannot
+  // retract).
   // ------------------------------------------------------------------
 
   /** Start a maintained distinct-count-per-key sink: the view tracks
@@ -146,33 +129,14 @@ object AggSync {
       maxBucketBytes: Long = DedupSync.DefaultMaxBucketBytes,
       splitsPerBatch: Int = TableSync.DefaultSplitsPerBatch,
       maxGens: Int = TableSync.DefaultMaxGens): Unit = {
-    val applied = TableSync.committedVersions(batch.sparkSession, path)
-    if (applied.exists(_ >= batchId)) {
-      // replay no-op; loud below the high-water mark (see applyDelta)
-      if (applied.max > batchId)
-        println(s"[AggSync] skipping batch $batchId below the table's " +
-          s"high-water mark ${applied.max} under $path — if this " +
-          "stream was restarted on a FRESH checkpoint its batch ids " +
-          "restarted and its data is being dropped; resume from the " +
-          "original checkpoint or use a new table path")
-      return
-    }
-    // <= |batch keys| * k longs; materialized once for the same
-    // four-consumer reason as applyDelta's delta
-    val delta = IncrementalAgg.kmvDelta(batch, keyCol, valCol, k)
-      .localCheckpoint()
-    val state =
-      if (applied.isEmpty)
-        delta.select(col(keyCol), col("dkmv").as("kmv")).limit(0)
-      else
-        TableSync.readCurrentForKeys(
-            batch.sparkSession, path, delta.select(col(keyCol)), keyCol)
-          .join(delta.select(col(keyCol)), Seq(keyCol), "left_semi")
-          .select(col(keyCol), col("kmv"))
-    val merged = IncrementalAgg.mergeKmv(state, delta, keyCol, k)
-    TableSync.applyBatch(merged.withColumn("ver", lit(batchId)),
-      path, keyCol, "ver", batchId, numBuckets, maxBucketBytes,
-      splitsPerBatch, maxGens)
+    // <= |batch keys| * k longs
+    if (!alreadyApplied(batch, path, batchId))
+      TableSync.applyMerged(TableSync.Merge.Kmv(k))(
+        IncrementalAgg.kmvDelta(batch, keyCol, valCol, k)
+          .withColumnRenamed("dkmv", "kmv")
+          .withColumn("ver", lit(batchId)),
+        path, keyCol, "ver", batchId, numBuckets, maxBucketBytes,
+        splitsPerBatch, maxGens)
   }
 
   /** The live distinct-count view: (key, n_seen, kth_min, est) —

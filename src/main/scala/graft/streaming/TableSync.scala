@@ -26,15 +26,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Write amplification per micro-batch is O(batch), not O(table):
   * storage is MERGE-ON-READ — a touched bucket normally gains one
   * DELTA GENERATION holding only the batch's rows (the manifest
-  * tracks a generation LIST per bucket), and readers fold
-  * max-version-per-key across generations; once a bucket accumulates
-  * `maxGens` generations, the next touching batch folds it back to
-  * one (amortized O(touched/maxGens) bucket rewrites per batch, each
-  * <= maxBucketBytes — the lakehouse MOR-with-compaction shape; the
-  * first cut was copy-on-write, rewriting every touched bucket whole
-  * per batch: bounded by maxBucketBytes but corpus/numBuckets per
-  * bucket until splits catch up, the term the streaming-dedup ladder
-  * autopsy isolated; maxGens=1 recovers exactly that behavior).
+  * tracks a generation LIST per bucket), and readers fold the
+  * generations under the table's [[Merge]]; once a bucket
+  * accumulates `maxGens` generations, the next touching batch folds
+  * it back to one (amortized O(touched/maxGens) bucket rewrites per
+  * batch, each <= maxBucketBytes — the lakehouse MOR-with-compaction
+  * shape; maxGens=1 degenerates to copy-on-write, rewriting every
+  * touched bucket whole per batch).
   * Untouched buckets' files are carried forward BY REFERENCE in the
   * manifest (zero IO; the spec asserts they stay byte-identical
   * across a batch). At 100 TB, a bucket should be a few GB — and the
@@ -217,23 +215,23 @@ object TableSync {
       split: Int = 0, sizes: Map[Int, Long] = Map.empty,
       hashHex: Int = 4,
       keyCol: Option[String] = None, verCol: Option[String] = None,
-      prev: Option[String] = None) {
+      merge: Merge = Merge.Latest, prev: Option[String] = None) {
     def serialize: String =
       // an UNKNOWN size (bucket last written by a pre-sizes manifest)
       // round-trips as `?`, never as 0 — the contraction trigger must
       // be able to tell "empty" from "never measured". Generation
       // lists join on "," (snapshot names are [vNrK], comma-free);
-      // the key/version column names ride the header so READERS can
-      // fold multi-generation buckets without being told the schema
-      // (columns with spaces are unsupported in this sink — the
-      // header is space-separated). `prev` — the manifest this commit
-      // replaced — is the commit-chain link readVersion walks to tell
-      // a committed version from a phantom archive; it trails the
-      // header, and header LENGTH disambiguates which optional fields
-      // are present (4 = bare, 5 = +prev, 6 = +cols, 7 = +cols +prev).
+      // the key/version columns and a non-Latest merge ride the
+      // header so READERS can fold multi-generation buckets without
+      // being told the schema (columns with spaces are unsupported in
+      // this sink). `prev` — the manifest this commit replaced — is
+      // the commit-chain link readVersion walks to tell a committed
+      // version from a phantom archive. Header: 4 fixed fields, then
+      // [key ver [merge]] [prev]; a merge is never a snapshot name.
       ((s"$name $numBuckets $split $hashHex" +
-        keyCol.zip(verCol).map { case (k, v) => s" $k $v" }
-          .getOrElse("") +
+        keyCol.zip(verCol).map { case (k, v) =>
+          s" $k $v" + (if (merge == Merge.Latest) "" else s" ${merge.name}")
+        }.getOrElse("") +
         prev.map(p => s" $p").getOrElse("")) +:
         entries.toSeq.sortBy(_._1).map { case (b, dirs) =>
           s"$b\t${dirs.mkString(",")}\t" +
@@ -246,16 +244,62 @@ object TableSync {
     val lines = text.trim.split("\n").map(_.trim).filter(_.nonEmpty)
     val head = lines.head.split(" ")
     val rows = lines.tail.map(_.split("\t"))
+    val opt = head.drop(4)
+    val cols = Option.when(opt.length >= 2)(opt(0) -> opt(1))
+    val (merge, prev) = opt.drop(2 * cols.size).partition(batchOf(_).isEmpty)
     Manifest(head(0), head(1).toInt,
       rows.map(a => a(0).toInt -> a(1).split(",").toSeq).toMap,
       if (head.length > 2) head(2).toInt else 0,
       rows.filter(a => a.length > 2 && a(2) != "?")
         .map(a => a(0).toInt -> a(2).toLong).toMap,
       if (head.length > 3) head(3).toInt else 4,
-      if (head.length >= 6) Some(head(4)) else None,
-      if (head.length >= 6) Some(head(5)) else None,
-      if (head.length == 5) Some(head(4))
-      else if (head.length == 7) Some(head(6)) else None)
+      cols.map(_._1), cols.map(_._2),
+      merge.headOption.fold[Merge](Merge.Latest)(Merge.parse),
+      prev.headOption)
+  }
+
+  /** How a table resolves several rows of one key, across a bucket's
+    * generations and within one batch; the owning sink picks it, the
+    * manifest records it (legacy reads as `Latest`). `Latest`: the
+    * highest version wins (upserts). `CountSum`: value columns sum,
+    * cast back to their stored type. `Kmv(k)`: value columns are
+    * sorted bottom-k hash arrays, merged by union. The last two are
+    * commutative, so AggSync lands each delta as one more generation
+    * without reading its state; their version resolves to its max.
+    */
+  private[streaming] sealed abstract class Merge(val name: String)
+  private[streaming] object Merge {
+    case object Latest extends Merge("latest")
+    case object CountSum extends Merge("countsum")
+    final case class Kmv(k: Int) extends Merge(s"kmv$k")
+    def parse(name: String): Merge =
+      if (name == CountSum.name) CountSum
+      else Kmv(name.stripPrefix("kmv").toInt)
+  }
+
+  /** `df` resolved to one row per `groupCols` under `merge` — the one
+    * fold of applyBatch's two legs and of the merge-on-read. `GenCol`
+    * breaks `Latest`'s version ties and is dropped.
+    */
+  private def resolve(df: DataFrame, merge: Merge, verCol: String,
+      groupCols: Seq[String]): DataFrame = merge match {
+    case Merge.Latest =>
+      val w = Window.partitionBy(groupCols.map(col): _*)
+        .orderBy(col(verCol).desc, col(GenCol).desc)
+      df.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn", GenCol)
+    case _ =>
+      val out = df.columns.filterNot(_ == GenCol).toSeq
+      val aggs = out.filterNot(groupCols.contains).map { c =>
+        (merge match {
+          case _ if c == verCol => max(col(c))
+          case Merge.Kmv(k) => slice(array_sort(array_distinct(
+            flatten(collect_list(col(c))))), 1, k)
+          case _ => sum(col(c)).cast(df.schema(c).dataType)
+        }).as(c)
+      }
+      df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+        .select(out.map(col): _*)
   }
 
   /** Hash width (md5 hex digits) for NEW tables: 8 digits = a 32-bit
@@ -354,16 +398,29 @@ object TableSync {
       maxBucketBytes: Long = Long.MaxValue,
       splitsPerBatch: Int = DefaultSplitsPerBatch,
       maxGens: Int = DefaultMaxGens,
+      localKeys: Option[DataFrame] = None): Unit =
+    applyMerged(Merge.Latest)(batch, path, keyCol, verCol, batchId,
+      numBuckets, maxBucketBytes, splitsPerBatch, maxGens, localKeys)
+
+  /** [[applyBatch]] under a table's [[Merge]]. */
+  private[streaming] def applyMerged(merge: Merge)(
+      batch: DataFrame, path: String, keyCol: String, verCol: String,
+      batchId: Long, numBuckets: Int, maxBucketBytes: Long,
+      splitsPerBatch: Int, maxGens: Int,
       localKeys: Option[DataFrame] = None): Unit = {
     val spark = batch.sparkSession
     val prev = currentManifest(spark, path)
-    // the manifest records the key/version columns precisely so
-    // writers and readers agree; a batch applied under a DIFFERENT
-    // key would bucket the same logical key into two places and the
-    // per-bucket merge-on-read fold could never collapse them again
-    // — fail loudly instead (legacy pre-column manifests record
-    // nothing and pass)
+    // the manifest records the key/version columns and the merge
+    // precisely so writers and readers agree; a batch applied under a
+    // DIFFERENT key would bucket the same logical key into two places
+    // and the per-bucket merge-on-read fold could never collapse them
+    // again (a different merge would sum upserts or rank deltas) —
+    // fail loudly instead (legacy pre-column manifests pass)
     prev.foreach { m =>
+      require(m.merge == merge,
+        s"table at $path folds its generations by '${m.merge.name}' " +
+          s"(manifest) but this batch was applied with '${merge.name}' " +
+          "— refusing to mix merges in one table")
       m.keyCol.foreach(k => require(k == keyCol,
         s"table at $path is keyed by '$k' (manifest) but applyBatch " +
           s"was called with keyCol='$keyCol' — refusing to split a " +
@@ -564,7 +621,7 @@ object TableSync {
       .map(r => if (r == 0) s"v$batchId" else s"v${batchId}r$r")
       .find(!referenced(_)).get
     // Previous rows of the FOLDING buckets only — every generation,
-    // tagged with its generation ordinal so the fold can break
+    // tagged with its generation ordinal so a `Latest` fold can break
     // same-version ties deterministically (newest generation wins;
     // batch rows outrank all stored generations). Generations served
     // by the same snapshot directory share one multi-path scan;
@@ -618,24 +675,19 @@ object TableSync {
     // so no second exchange appears (plan-checked). Per-task work is
     // bounded: a fold reads <= maxBucketBytes per bucket when the
     // split trigger is armed; disarmed tables keep the caller's
-    // bucket sizing responsibility they always had.
-    val w = Window.partitionBy(col(BucketCol), col(keyCol))
-      .orderBy(col(verCol).desc, col(GenCol).desc)
-    val foldedRows = folding
-      .repartition(col(BucketCol))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    // bucket sizing responsibility they always had. A summing merge
+    // groups instead of windowing, on the same clustering.
+    val byKey = Seq(BucketCol, keyCol)
+    val foldedRows =
+      resolve(folding.repartition(col(BucketCol)), merge, verCol, byKey)
     // Append buckets: the batch's own rows, one-row-per-key within
-    // the generation (same window, batch-sized — keeps every stored
-    // generation internally deduped so sizes and reads stay tight)
-    val appendRows = batchTagged
+    // the generation (same fold, batch-sized — keeps every stored
+    // generation internally resolved so sizes and reads stay tight)
+    val appendRows = resolve(batchTagged
       .filter(col(BucketCol).isin(appendSet.toSeq: _*))
-      .repartition(col(BucketCol))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+      .repartition(col(BucketCol)), merge, verCol, byKey)
     val snap = foldedRows
       .unionByName(appendRows, allowMissingColumns = true)
-      .drop(GenCol)
     phase("snap_write") {
       snap.write.mode("overwrite").partitionBy(BucketCol)
         .parquet(s"$path/$snapName")
@@ -696,7 +748,7 @@ object TableSync {
     phase("commit_pointer") {
       commitPointer(spark, path, prev.map(_.name),
         Manifest(snapName, cn, entries, cs, sizes, hx,
-          Some(keyCol), Some(verCol)))
+          Some(keyCol), Some(verCol), merge))
     }
     phase("gc") { gc(spark, path, batchId) }
     // free the bucketed batch's checkpoint blocks — ONLY when this
@@ -782,7 +834,7 @@ object TableSync {
       }
     commitPointer(spark, path, Some(prev.name),
       Manifest(snapName, newNumBuckets, entries, 0, sizes, prev.hashHex,
-        Some(keyCol), prev.verCol))
+        Some(keyCol), prev.verCol, prev.merge))
     batchOf(snapName).foreach(gc(spark, path, _))
   }
 
@@ -1127,10 +1179,11 @@ object TableSync {
 
   /** Union the bucket directories a manifest references, then apply
     * the merge-on-read fold: a bucket with several delta GENERATIONS
-    * resolves to max-version-per-key, same-version ties to the newest
-    * generation (batch order — the exact fold applyBatch performs
-    * when it compacts the bucket, so a read before and after a fold
-    * is identical). Generations served by the same snapshot write
+    * resolves under the table's [[Merge]] (for `Latest`,
+    * max-version-per-key, same-version ties to the newest generation
+    * in batch order) — the exact fold applyBatch performs when it
+    * compacts the bucket, so a read before and after a fold is
+    * identical. Generations served by the same snapshot write
     * share a schema and batch into one multi-path scan; the common
     * fully-folded case is a plain union with NO merge window, so
     * steady-state read plans are unchanged. Groups union
@@ -1171,10 +1224,7 @@ object TableSync {
           s"multi-generation manifest under $path records no " +
             "key/version columns — manifest corrupted or written " +
             "by an incompatible version"))
-      val w = Window.partitionBy(col(k))
-        .orderBy(col(v).desc, col(GenCol).desc)
-      u.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn", GenCol)
+      resolve(u, m.merge, v, Seq(k))
     }
     (folded, plain) match {
       // folded side first: it carries the newest batch's (possibly

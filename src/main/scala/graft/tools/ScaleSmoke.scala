@@ -821,8 +821,8 @@ object ScaleSmoke {
 
     // AggSync maintained DISTINCT view (KMV state): batch 0 seeds the
     // full replica corpus into a per-source-bucket sketch table, then
-    // a 10-key batch folds in. The claim under test is O(|delta| +
-    // touched buckets) per batch: batch-1 wall-clock and rewritten
+    // a 10-key batch folds in. The claim under test is O(|delta|)
+    // per batch: batch-1 wall-clock and rewritten
     // bytes must stay flat as k grows (state is <= 64 longs per key
     // REGARDLESS of accumulated volume — the sketch's whole point).
     locally {
@@ -853,16 +853,16 @@ object ScaleSmoke {
 
     // aggsyncp: the PROGRESSIVE rung the other sinks already have
     // (dsyncp/vsyncp/annlife — round-17 order #5). Claim under test:
-    // a maintained view's per-batch cost is O(|delta| + touched
-    // buckets) ACROSS BUCKET EVOLUTION — seed 100k keys into BOTH
-    // maintained views (count/sum and KMV distinct), arm
-    // maxBucketBytes low enough that the accumulated view keeps
-    // forcing linear-hash splits, then fold a FIXED 1k-row/100-key
-    // delta per batch. Pass condition: warm tails (batches ~6+) stay
-    // FLAT in accumulated volume while the scheme visibly widens —
-    // a slope here would mean the fold pays O(view), the exact
-    // regression the readCurrentForKeys sub-table read exists to
-    // prevent.
+    // a maintained view's per-batch cost is O(|delta|) ACROSS BUCKET
+    // EVOLUTION — seed 100k keys into BOTH maintained views
+    // (count/sum and KMV distinct), arm maxBucketBytes low enough
+    // that the accumulated view keeps forcing linear-hash splits,
+    // then fold a FIXED 1k-row/100-key delta per batch. Pass
+    // condition: warm tails (batches ~6+) stay FLAT in accumulated
+    // volume while the scheme visibly widens — a slope here would
+    // mean a batch pays O(view): each delta lands as one more
+    // generation, and only the maxGens bucket folds and the splits
+    // read stored rows.
     locally {
       val cs = java.nio.file.Files
         .createTempDirectory("smoke_aggsyncp_cs").toString

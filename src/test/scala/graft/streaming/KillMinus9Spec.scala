@@ -68,6 +68,7 @@ class KillMinus9Spec extends AnyFunSuite {
     val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
       "-Xmx3g", "-Dfile.encoding=UTF-8", "-Dsun.jnu.encoding=UTF-8",
       "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+      s"-Djava.io.tmpdir=${System.getProperty("java.io.tmpdir")}",
       s"-Dgraft.faultpoints.$mode=$site",
       s"-Dgraft.faultpoints.sentinel=${sentinel.getAbsolutePath}",
       "-cp", System.getProperty("java.class.path"),

@@ -1117,4 +1117,129 @@ class StreamingSpec extends AnyFunSuite {
     assert(graft.streaming.TableSync.versions(spark, path) ==
       Seq(0L, 1L), "replay must not write a new version")
   }
+
+  /** Rows of `df` with its columns in name order, as sorted strings. */
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(df.columns.sorted.toSeq.map(col): _*).collect()
+      .map(_.toString).toSeq.sorted
+
+  test("AggSync readView and readCurrent are identical just before and " +
+    "just after a maxGens fold (count/sum and KMV)") {
+    import spark.implicits._
+    // one bucket, maxGens 3: batches 0-2 leave three delta generations,
+    // and batch 3 (a key of its own) folds them back to one
+    def gens(p: String) = TableSync.currentManifest(spark, p).get
+      .entries(0).length
+    def check(path: String, merge: TableSync.Merge,
+        apply: (Seq[(String, Long)], Long) => Unit,
+        view: () => org.apache.spark.sql.DataFrame, key: String): Unit = {
+      val batches = Seq(
+        Seq(("a", 1L), ("b", 2L)), Seq(("a", 3L), ("c", 4L)),
+        Seq(("a", 5L), ("b", 6L), ("b", 7L)), Seq(("z", 8L)))
+      batches.take(3).zipWithIndex.foreach { case (r, b) =>
+        apply(r, b.toLong) }
+      assert(gens(path) == 3 &&
+        TableSync.currentManifest(spark, path).get.merge == merge)
+      val notZ = col(key) =!= "z"
+      val (v0, c0) = (rowSet(view()),
+        rowSet(TableSync.readCurrent(spark, path)))
+      apply(batches(3), 3L)
+      assert(gens(path) == 1, "batch 3 did not fold the bucket")
+      assert(rowSet(view().filter(notZ)) == v0, "view moved across the fold")
+      assert(rowSet(TableSync.readCurrent(spark, path).filter(notZ)) == c0,
+        "readCurrent moved across the fold")
+    }
+    val cs = Files.createTempDirectory("aggsync-fold-cs").toString
+    check(cs, TableSync.Merge.CountSum,
+      (r, b) => AggSync.applyDelta(r.toDF("k", "v"), cs, "k", "v", b,
+        numBuckets = 1, maxGens = 3),
+      () => AggSync.readView(spark, cs), "k")
+    val view = AggSync.readView(spark, cs)
+      .select(col("k"), col("n"), col("tot").cast("string"))
+      .as[(String, Long, String)].collect().toSet
+    assert(view == Set(("a", 3L, "9.00"), ("b", 3L, "15.00"),
+      ("c", 1L, "4.00"), ("z", 1L, "8.00")), s"folded sums wrong: $view")
+    val km = Files.createTempDirectory("aggsync-fold-kmv").toString
+    check(km, TableSync.Merge.Kmv(2),
+      (r, b) => AggSync.applyKmvDelta(r.toDF("key", "v"), km, "key", "v",
+        b, k = 2, numBuckets = 1, maxGens = 3),
+      () => AggSync.readDistinctView(spark, km, k = 2), "key")
+    val est = AggSync.readDistinctView(spark, km, k = 2)
+      .select(col("key"), col("n_seen")).as[(String, Int)].collect().toMap
+    assert(est == Map("a" -> 2, "b" -> 2, "c" -> 1, "z" -> 1), s"$est")
+  }
+
+  test("TableSync.readVersion on an AggSync table equals the view as of " +
+    "that batch") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("aggsync-ver").toString
+    val batches = (0 until 5).map(b =>
+      (0 until 12).map(i => (s"k${(i * (b + 1)) % 7}", i + b / 4.0)))
+    batches.zipWithIndex.foreach { case (r, b) =>
+      AggSync.applyDelta(r.toDF("k", "v"), path, "k", "v", b.toLong,
+        numBuckets = 2, maxGens = 2)
+    }
+    // retention keeps the current batch and the two before it
+    (2 to 4).foreach { b =>
+      val want = batches.take(b + 1).flatten.toDF("k", "v")
+        .groupBy("k").agg(count(lit(1)).as("n"),
+          sum(col("v").cast("decimal(12,2)")).cast("string").as("tot"))
+      val got = TableSync.readVersion(spark, path, b.toLong)
+        .select(col("k"), col("n"), col("tot").cast("string").as("tot"))
+      assert(rowSet(got) == rowSet(want), s"version $b diverged")
+    }
+  }
+
+  test("plain TableSync.applyBatch on an AggSync table fails loudly, and " +
+    "AggSync on an upsert table too") {
+    import spark.implicits._
+    val agg = Files.createTempDirectory("aggsync-mix").toString
+    AggSync.applyDelta(Seq(("a", 1.0)).toDF("k", "v"), agg, "k", "v", 0L)
+    val e = intercept[IllegalArgumentException](TableSync.applyBatch(
+      Seq(("a", 1L, BigDecimal(2)), ("b", 1L, BigDecimal(3)))
+        .toDF("k", "n", "tot").withColumn("ver", lit(1L)),
+      agg, "k", "ver", 1L))
+    assert(e.getMessage.contains("countsum"), e.getMessage)
+    val ups = Files.createTempDirectory("aggsync-mix-ups").toString
+    TableSync.applyBatch(Seq(("a", 1L)).toDF("k", "ver"), ups, "k", "ver", 0L)
+    intercept[IllegalArgumentException](AggSync.applyDelta(
+      Seq(("a", 1.0)).toDF("k", "v"), ups, "k", "v", 1L))
+    assert(TableSync.versions(spark, agg) == Seq(0L) &&
+      TableSync.versions(spark, ups) == Seq(0L))
+  }
+
+  test("AggSync never reads its state: with the split trigger disarmed " +
+    "a fixed-size delta submits as many jobs at batch 6 as at batch 2") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val path = Files.createTempDirectory("aggsync-jobs").toString
+    val group = s"aggsync-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    val delta = (0 until 40).map(i => (s"k${i % 20}", i.toDouble))
+      .toDF("k", "v")
+    def jobsOf(b: Long): Int = {
+      jobs.set(0)
+      sc.setJobGroup(group, "aggsync-jobs")
+      try AggSync.applyDelta(delta, path, "k", "v", b, numBuckets = 4,
+        maxBucketBytes = Long.MaxValue)
+      finally sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBusDrain(sc)
+      jobs.get()
+    }
+    sc.addSparkListener(listener)
+    val perBatch =
+      try (0L to 6L).map(jobsOf)
+      finally sc.removeSparkListener(listener)
+    assert(perBatch(6) == perBatch(2),
+      s"jobs per batch grew with the stored generations: $perBatch")
+    assert(TableSync.currentManifest(spark, path).get.entries.values
+      .forall(_.length == 7), "expected seven unfolded generations")
+  }
 }

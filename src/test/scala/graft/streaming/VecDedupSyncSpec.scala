@@ -141,7 +141,7 @@ class VecDedupSyncSpec extends AnyFunSuite {
     // applyVecs must overwrite idempotently and commit the index
     val batchIdx = Dedup.vecDedupIndex(b2, "embedding", "vec_id",
       dim = 8).localCheckpoint()
-    PairsStore.writeBatch(
+    DedupSink.writeBatch(
       Dedup.incrementalVecPairs(VecDedupSync.readIndex(spark, ix),
         batchIdx, threshold = 0.9, dim = 8),
       pr, "cosine", 2L)
@@ -330,7 +330,7 @@ class VecDedupSyncSpec extends AnyFunSuite {
     // crash after v_sidecar_write leaves
     val batchIdx = Dedup.vecDedupIndex(b1, "embedding", "vec_id",
       dim = 8).localCheckpoint()
-    PairsStore.writeBatch(
+    DedupSink.writeBatch(
       Dedup.incrementalVecPairs(VecDedupSync.readIndex(spark, ix),
         batchIdx, threshold = 0.9, dim = 8),
       pr, "cosine", 1L)
